@@ -4,13 +4,14 @@ The reference mutates a history table in place — anti-joins for new/deleted
 rows, an equi-join with attribute-inequality residual for changed rows, then
 two UPDATEs + three INSERTs (py_scripts/data_to_db.py:145-295). Spark has no
 in-place UPDATE, and a Spark-first design doesn't want one: we classify the
-snapshot against the current version set with TWO broadcast-able joins —
-snapshot ⟕ current (new/changed/unchanged) plus current ▷ snapshot (deleted),
-the exact decomposition of a full outer on a unique key — and emit the new
-history as ``untouched ∪ closed ∪ opened``, a deterministic, testable
-transform with an injectable ``run_ts``. (A single full-outer classify was
-the round-1 shape; Spark executes full outer only as sort-merge and AQE may
-never demote it to broadcast, so the decomposed form wins at dim scale.)
+snapshot against the current version set with TWO broadcast-able anti joins
+— snapshot ▷ unchanged current (new or changed) plus current ▷ snapshot
+(deleted), the exact decomposition of a full outer on a unique key — and
+emit the new history as ``untouched ∪ closed ∪ opened``, a deterministic,
+testable transform with an injectable ``run_ts``. (A single full-outer
+classify was the round-1 shape; Spark executes full outer only as sort-merge
+and AQE may never demote it to broadcast, so the decomposed form wins at dim
+scale.)
 
 Scale notes (100 TB design): dimension history ≪ facts, so a full rewrite per
 load is cheap; the classify join shuffles only by the natural key (or
@@ -69,52 +70,36 @@ def scd2_apply_snapshot(
     cur = current_view(hist, key).select(cols)
     snap = snapshot.select(cols)
 
-    # Classify in two broadcast-able joins instead of one full outer:
-    # Spark executes a full-outer equi-join only as sort-merge (broadcast
-    # hash doesn't support it), which put 6 SMJs in the r1 plan audit.
-    # snap ⟕ cur (new/changed/unchanged) + cur ▷ snap (deleted) covers the
-    # same four-way split, and both joins broadcast the small side at dim
-    # scale — the full-outer semantics are exactly these two pieces because
-    # the join is on a unique key.
+    # Classify in two anti joins instead of one full outer: Spark executes
+    # a full-outer equi-join only as sort-merge (broadcast hash doesn't
+    # support it), which put 6 SMJs in the r1 plan audit. snap ▷ unchanged
+    # cur (new or changed) + cur ▷ snap (deleted) covers the same split on a
+    # unique key. An anti join is planned at its left side's size, so every
+    # join downstream of these two still sees a dim-sized input and
+    # broadcasts; a left outer join is planned at the product of its sides'
+    # sizes, which turned the close/keep joins into sort-merge joins.
     s = snap.alias("s")
     c = cur.alias("c")
-    joined = s.join(c, F.col(f"s.{key}") == F.col(f"c.{key}"), "left")
-
     if null_safe_diff:
-        diff = reduce(
-            lambda a, b: a | b,
-            [~F.col(f"s.{x}").eqNullSafe(F.col(f"c.{x}")) for x in attrs],
-        )
+        same = [F.col(f"s.{x}").eqNullSafe(F.col(f"c.{x}")) for x in attrs]
     else:
-        # NULL-blind <>, faithful to the reference's changed-rows join
-        diff = reduce(
-            lambda a, b: a | b,
-            [F.col(f"s.{x}") != F.col(f"c.{x}") for x in attrs],
-        )
-
-    classified = joined.select(
-        F.col(f"s.{key}").alias(key),
-        *[F.col(f"s.{x}").alias(f"s_{x}") for x in attrs],
-        F.when(F.col(f"c.{key}").isNull(), F.lit("new"))
-        .when(diff, F.lit("changed"))
-        .otherwise(F.lit("unchanged"))
-        .alias("_status"),
-    ).cache()
-    # deleted is read twice (affected_keys + tombstones) but is dim-scale;
-    # recomputing the anti join is cheaper than pinning another cache entry
-    # for the lifetime of a long-running multi-day ingest
+        # NULL-blind <>, faithful to the reference's changed-rows join: a
+        # NULL on either side never counts as a change
+        same = [~F.coalesce(F.col(f"s.{x}") != F.col(f"c.{x}"), F.lit(False)) for x in attrs]
+    unchanged = reduce(lambda a, b: a & b, same, F.col(f"s.{key}") == F.col(f"c.{key}"))
+    new_or_changed = s.join(c, unchanged, "left_anti")
+    # both frames are read twice (affected keys + opened rows) but are
+    # dim-scale: recomputing a broadcast join over ~150 rows costs less than
+    # the jobs a cache adds, and a cache here would stay pinned for the
+    # lifetime of a long-running multi-day ingest
     deleted = cur.join(snap.select(key), key, "left_anti")
 
-    # 'new' is included so that a re-added key's open TOMBSTONE gets closed
-    # (the reference never closes it — data_to_db.py:209-271 only updates
-    # changed/deleted keys — leaving two open rows per re-added terminal;
-    # that latent bug is not replicated: hist invariants > bug parity here,
-    # and the bundled data never re-adds a deleted terminal)
-    affected_keys = (
-        classified.filter(F.col("_status").isin("changed", "new"))
-        .select(key)
-        .unionByName(deleted.select(key))
-    )
+    # new keys are included so that a re-added key's open TOMBSTONE gets
+    # closed (the reference never closes it — data_to_db.py:209-271 only
+    # updates changed/deleted keys — leaving two open rows per re-added
+    # terminal; that latent bug is not replicated: hist invariants > bug
+    # parity here, and the bundled data never re-adds a deleted terminal)
+    affected_keys = new_or_changed.select(key).unionByName(deleted.select(key))
 
     # close ALL open rows (any deleted_flg) of affected keys — reference UPDATE
     # matches on key + open effective_to only (data_to_db.py:227-232, 251-256)
@@ -127,9 +112,7 @@ def scd2_apply_snapshot(
     )
 
     opened_live = (
-        classified.filter(F.col("_status").isin("new", "changed"))
-        .select(key, *[F.col(f"s_{x}").alias(x) for x in attrs])
-        .withColumn("effective_from", F.lit(run_ts))
+        new_or_changed.withColumn("effective_from", F.lit(run_ts))
         .withColumn("effective_to", F.lit(HIGH_TS))
         .withColumn("deleted_flg", F.lit(0))
     )

@@ -18,6 +18,7 @@ import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..operators.scd2 import scd2_apply_snapshot
 from ..schemas import BLACKLIST_RAW, DIM_TERMINALS_HIST, REP_FRAUD, TERMINALS_SNAPSHOT
@@ -104,4 +105,9 @@ def run_day(
             if os.path.exists(p):
                 archive_file(p, archive_dir)
 
-    return state.store.read(REPORT, REP_FRAUD).filter(f"report_dt = '{ts}'")
+    # report_date (the stamp's partition column) prunes the read to the
+    # day's directory; report_dt alone cannot be mapped to it
+    mart = state.store.read(REPORT, REP_FRAUD)
+    return mart.filter(
+        (F.col("report_date") == F.to_date(F.lit(ts))) & (F.col("report_dt") == F.lit(ts))
+    )

@@ -5,11 +5,14 @@ Each rule takes the day's typed DataFrames and returns report-shaped rows
 them to REP_FRAUD with a stamped report_dt.
 
 Scale notes: all dims (cards/accounts/clients/blacklist/terminals-hist) are
-small relative to the fact, so every identity lookup is an explicit
-``broadcast`` — on a 1000-executor cluster the fact never shuffles for these
-joins. The only unavoidable fact shuffles are the per-card window/groupBy in
-Q3/Q4; both partition by ``card_num``, so Catalyst reuses one exchange per
-rule chain. AQE handles hot-card skew.
+small relative to the fact. The seed dims and the blacklist arrive as local
+relations (``sources.local.local_frame``) whose size stats let the planner
+broadcast them; the card→account→client lookups carry no hint, while the
+blacklist and terminals-hist lookups add an explicit ``broadcast`` — on a
+1000-executor cluster the fact never shuffles for these joins. The only
+unavoidable fact shuffles are the per-card window/groupBy in Q3/Q4; both
+partition by ``card_num``, so Catalyst reuses one exchange per rule chain.
+AQE handles hot-card skew.
 """
 
 from __future__ import annotations

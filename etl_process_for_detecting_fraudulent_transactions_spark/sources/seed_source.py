@@ -3,9 +3,11 @@
 The reference seeds cards/accounts/clients from an 889-line SQL dump
 re-executed every run (SURVEY §2.1 S3; ddl_dml.sql, data_to_db.py:28-87).
 We don't embed a SQL engine for that: the dump is data, so we extract the
-INSERT literals on the driver (dims are tiny — 322 rows) and create typed
-DataFrames, applying the same column renames the reference applies on load
-(account→account_num, patronymic→patrinymic; data_to_db.py:31-83).
+INSERT literals on the driver (dims are tiny — 322 rows) and build typed
+local relations (``local_frame``), whose size stats let the planner
+broadcast them into every identity lookup. Column renames follow the
+reference's load (account→account_num, patronymic→patrinymic;
+data_to_db.py:31-83).
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import DIM_ACCOUNTS, DIM_CARDS, DIM_CLIENTS
+from .local import local_frame
 
 _INSERT_RE = re.compile(
     r"insert\s+into\s+(\w+)\s*\(([^)]*)\)\s*values\s*\((.*?)\)\s*;",
@@ -86,7 +89,7 @@ def read_seed_dims(spark: SparkSession, dump_path: str) -> dict[str, DataFrame]:
         for r in tables.get("clients", [])
     ]
     return {
-        "cards": spark.createDataFrame(cards, schema=DIM_CARDS),
-        "accounts": spark.createDataFrame(accounts, schema=DIM_ACCOUNTS),
-        "clients": spark.createDataFrame(clients, schema=DIM_CLIENTS),
+        "cards": local_frame(spark, cards, DIM_CARDS),
+        "accounts": local_frame(spark, accounts, DIM_ACCOUNTS),
+        "clients": local_frame(spark, clients, DIM_CLIENTS),
     }

@@ -20,6 +20,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from .sources.local import local_frame
+
 
 class ParquetStore:
     def __init__(self, spark: SparkSession, root: str):
@@ -37,7 +39,7 @@ class ParquetStore:
         if not self.exists(name):
             if schema is None:
                 raise FileNotFoundError(self.path(name))
-            return self.spark.createDataFrame([], schema=schema)
+            return local_frame(self.spark, [], schema)
         reader = self.spark.read
         if schema is not None:
             reader = reader.schema(schema)

@@ -1,10 +1,9 @@
 """The python -m CLI (reference `python main.py` parity)."""
 
 import os
-import shutil
 
 from etl_process_for_detecting_fraudulent_transactions_spark.__main__ import main
-from tests.conftest import REFDATA, SEED_DUMP
+from tests.conftest import SEED_DUMP, day_run_ts, perfbench_module, stage_day
 
 
 def test_cli_empty_landing_dir_fails(spark, tmp_path):
@@ -16,21 +15,27 @@ def test_cli_empty_landing_dir_fails(spark, tmp_path):
     assert rc == 1
 
 
-def test_cli_processes_one_day(spark, tmp_path):
+def test_cli_processes_one_day(spark, fraud_corpus, tmp_path):
+    """One CLI invocation consumes the first pending day of a generated
+    corpus: its inputs are archived and REP_FRAUD holds exactly the rows the
+    DuckDB rules oracle expects for that day."""
+    oracle = perfbench_module("oracle")
+    day = fraud_corpus.dates[0]
     data = tmp_path / "data"
-    data.mkdir()
-    for f in ("transactions_01032021.txt", "terminals_01032021.xlsx",
-              "passport_blacklist_01032021.xlsx"):
-        shutil.copy(os.path.join(REFDATA, f), data / f)
+    stage_day(fraud_corpus, day, str(data))
     rc = main(
         ["--data-dir", str(data), "--store-dir", str(tmp_path / "store"),
-         "--seed-dump", SEED_DUMP, "--show", "0"]
+         "--seed-dump", fraud_corpus.seed_path, "--show", "0"]
     )
     assert rc == 0
-    # consumed files are archived; day-1 report has the 2 golden events
-    assert not (data / "transactions_01032021.txt").exists()
+    assert os.listdir(data) == []  # the whole triplet was consumed
+    assert len(os.listdir(tmp_path / "archive")) == 3
+    hist = oracle.Scd2Oracle().apply(fraud_corpus.snapshots[day], day_run_ts(day))
+    want = oracle.rep_fraud_rows(fraud_corpus.tx_path(day), day, fraud_corpus.cards(),
+                                 fraud_corpus.accounts(), fraud_corpus.clients(),
+                                 fraud_corpus.blacklists[day], hist)
     out = spark.read.parquet(str(tmp_path / "store" / "rep_fraud"))
-    assert out.count() == 2
+    assert out.count() == len(want) > 0
 
 
 def test_bench_emits_contract_json(tmp_path):

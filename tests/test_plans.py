@@ -72,6 +72,17 @@ def test_report_mart_reads_prune_partitions(spark, tmp_path):
     assert got.count() == 1
 
 
+def test_run_day_read_back_prunes_to_the_day(fraud_run):
+    """run_day returns the day's mart rows through a scan pruned to the
+    day's report_date directory, so the read-back does not list and scan
+    every earlier day's files."""
+    day = fraud_run[-1]
+    plan = _plan(day["report"])
+    pf = plan[plan.index("PartitionFilters: ["):]
+    pf = pf[: pf.index("]")]
+    assert "isnotnull(report_date" in pf and f"= {day['day'].isoformat()})" in pf, pf
+
+
 def test_topk_uses_take_ordered_not_global_sort(spark, sf_dir):
     """ORDER BY + LIMIT compiles to TakeOrderedAndProject (per-partition
     partial top-k), not a full global sort."""

@@ -99,6 +99,36 @@ def test_scd2_invariants(scd2_env, snapshots):
     assert set(by_key) == seen_keys
 
 
+def test_scd2_null_transitions_blind_and_safe(spark):
+    """NULL-blind diff (the reference's ``<>``) misses value<->NULL
+    transitions and sees a real change; the NULL-safe diff sees all three.
+    K1 value->NULL, K2 NULL->value, K3 unchanged NULL, K4 a->b."""
+    from etl_process_for_detecting_fraudulent_transactions_spark.operators.scd2 import (
+        HIGH_TS,
+        scd2_apply_snapshot,
+    )
+
+    t0, t1 = dt.datetime(2024, 1, 1, 12), dt.datetime(2024, 1, 2, 12)
+    hist = spark.createDataFrame(
+        [(k, v, t0, HIGH_TS, 0) for k, v in (("K1", "a"), ("K2", None), ("K3", None), ("K4", "a"))],
+        "terminal_id string, terminal_city string, effective_from timestamp, "
+        "effective_to timestamp, deleted_flg int",
+    )
+    snap = spark.createDataFrame(
+        [("K1", None), ("K2", "b"), ("K3", None), ("K4", "b")],
+        "terminal_id string, terminal_city string",
+    )
+
+    def opened(null_safe):
+        out = scd2_apply_snapshot(hist, snap, run_ts=t1, attrs=("terminal_city",),
+                                  null_safe_diff=null_safe)
+        return {(r.terminal_id, r.terminal_city) for r in out.collect()
+                if r.effective_from == t1}
+
+    assert opened(False) == {("K4", "b")}
+    assert opened(True) == {("K1", None), ("K2", "b"), ("K4", "b")}
+
+
 def test_langid_smoke(spark):
     from etl_process_for_detecting_fraudulent_transactions_spark.functions.textops import (
         lang_id_ngram,
