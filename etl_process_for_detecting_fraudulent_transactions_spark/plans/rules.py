@@ -7,12 +7,15 @@ them to REP_FRAUD with a stamped report_dt.
 Scale notes: all dims (cards/accounts/clients/blacklist/terminals-hist) are
 small relative to the fact. The seed dims and the blacklist arrive as local
 relations (``sources.local.local_frame``) whose size stats let the planner
-broadcast them; the card→account→client lookups carry no hint, while the
-blacklist and terminals-hist lookups add an explicit ``broadcast`` — on a
-1000-executor cluster the fact never shuffles for these joins. The only
-unavoidable fact shuffles are the per-card window/groupBy in Q3/Q4; both
-partition by ``card_num``, so Catalyst reuses one exchange per rule chain.
-AQE handles hot-card skew.
+broadcast them; the card→account→client lookups and Q1's blacklist EXISTS
+test (a broadcast existence join) carry no hint, while the terminals-hist
+lookup adds an explicit ``broadcast`` — on a 1000-executor cluster the fact
+never shuffles for these joins. Q2, Q3 and Q4 share one lookup chain
+(``_identity_by_card``), so a day's plans build the card and client
+broadcasts once. The only fact shuffles are Q3's and Q4's per-card windows:
+each rule has exactly one ``card_num`` exchange, over its own input (Q3
+every transaction, Q4 the PAYMENT/WITHDRAW rows), and neither broadcasts
+anything fact-sized. AQE handles hot-card skew.
 """
 
 from __future__ import annotations
@@ -27,12 +30,14 @@ from ..operators.scd2 import current_view
 
 
 def _identity_by_card(events: DataFrame, cards: DataFrame, accounts: DataFrame,
-                      clients: DataFrame, event_type: str) -> DataFrame:
-    """Left-join identity lookup chain card→account→client shared by Q3/Q4
-    (rep_fraud.py:151-165, 229-242)."""
+                      clients: DataFrame, event_type: str, how: str = "left") -> DataFrame:
+    """Identity lookup chain card→account→client shared by Q2-Q4
+    (rep_fraud.py:81-98, 151-165, 229-242). ``how`` applies to the card and
+    account hops (Q2 keeps only cards of expired accounts); the client hop is
+    always left."""
     return (
-        events.join(cards.select("card_num", "account_num"), "card_num", "left")
-        .join(accounts.select("account_num", "client"), "account_num", "left")
+        events.join(cards.select("card_num", "account_num"), "card_num", how)
+        .join(accounts.select("account_num", "client"), "account_num", how)
         .join(
             clients.select(
                 "client_id", "passport_num", "last_name", "first_name",
@@ -66,10 +71,14 @@ def passport_fraud(
     membership test, SURVEY §2.2 P3). Strict ``>``: a passport expiring ON
     run_date is still valid. NULL passport_valid_to never matches.
     """
-    bl = blacklist.select("passport_num").distinct().withColumn("_bl", F.lit(1))
+    # EXISTS, OR-ed with the expiry test, plans as a broadcast ExistenceJoin:
+    # a blacklist that lists a passport twice still yields one client row
+    listed = blacklist.alias("b").where(
+        F.col("b.passport_num") == F.col("c.passport_num").outer()
+    ).exists()
     invalid_clients = (
-        clients.join(F.broadcast(bl), "passport_num", "left")
-        .filter((F.lit(run_date) > F.col("passport_valid_to")) | F.col("_bl").isNotNull())
+        clients.alias("c")
+        .filter((F.lit(run_date) > F.col("c.passport_valid_to")) | listed)
         .select(
             "client_id",
             fio_concat("last_name", "first_name", "patrinymic").alias("fio"),
@@ -105,27 +114,9 @@ def account_fraud(
     """Q2: transactions on accounts expired strictly before run_date; client
     identity via LEFT join (account kept even without a client)
     (rep_fraud.py:59-106)."""
-    invalid_accounts = (
-        accounts.filter(F.lit(run_date) > F.col("valid_to"))
-        .join(clients, F.col("client") == F.col("client_id"), "left")
-        .select(
-            "account_num",
-            fio_concat("last_name", "first_name", "patrinymic").alias("fio"),
-            "passport_num",
-            "phone",
-        )
-    )
-    return (
-        transactions.join(cards.select("card_num", "account_num"), "card_num", "inner")
-        .join(invalid_accounts, "account_num", "inner")
-        .select(
-            F.col("trans_date").alias("event_dt"),
-            F.col("passport_num").alias("passport"),
-            "fio",
-            "phone",
-            F.lit("account_fraud").alias("event_type"),
-        )
-    )
+    events = transactions.select("card_num", F.col("trans_date").alias("event_dt"))
+    expired = accounts.filter(F.lit(run_date) > F.col("valid_to"))
+    return _identity_by_card(events, cards, expired, clients, "account_fraud", how="inner")
 
 
 def city_fraud(
@@ -157,19 +148,17 @@ def city_fraud(
         city_dim, "terminal", "left"
     )
 
-    multi_city_cards = (
-        tx_city.groupBy("card_num")
-        .agg(F.count_distinct("terminal_city").alias("cnt_city"))
-        .filter(F.col("cnt_city") > 1)
-        .select("card_num")
-    )
-
+    # one exchange on card_num: the distinct-city count is a whole-partition
+    # frame over the leads' window (collect_set skips NULL cities), and lead
+    # never crosses cards, so dropping single-city cards after the window
+    # leaves every multi-city card's sequence intact
     w = Window.partitionBy("card_num").orderBy("trans_date")
-    seq = (
-        tx_city.join(F.broadcast(multi_city_cards), "card_num", "inner")
-        .withColumn("lead_trans_date", F.lead("trans_date").over(w))
-        .withColumn("lead_terminal_city", F.lead("terminal_city").over(w))
-    )
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    seq = tx_city.withColumns({
+        "lead_trans_date": F.lead("trans_date").over(w),
+        "lead_terminal_city": F.lead("terminal_city").over(w),
+        "cnt_city": F.size(F.collect_set("terminal_city").over(whole)),
+    }).filter(F.col("cnt_city") > 1)
     if compat_time_filter:
         time_ok = minutes_between("trans_date", "lead_trans_date") <= 60
     else:
@@ -202,13 +191,15 @@ def guessing_amount_fraud(
         .select("card_num", "trans_date", "amt", "oper_result")
         .withColumn("amt_int", amt_i)
         # lag the materialized column so all lags share ONE Window node
-        .withColumn("lag_amt_1", F.lag("amt_int", 1).over(w))
-        .withColumn("lag_amt_2", F.lag("amt_int", 2).over(w))
-        .withColumn("lag_amt_3", F.lag("amt_int", 3).over(w))
-        .withColumn("lag_result_1", F.lag("oper_result", 1).over(w))
-        .withColumn("lag_result_2", F.lag("oper_result", 2).over(w))
-        .withColumn("lag_result_3", F.lag("oper_result", 3).over(w))
-        .withColumn("lag_trans_date", F.lag("trans_date", 3).over(w))
+        .withColumns({
+            "lag_amt_1": F.lag("amt_int", 1).over(w),
+            "lag_amt_2": F.lag("amt_int", 2).over(w),
+            "lag_amt_3": F.lag("amt_int", 3).over(w),
+            "lag_result_1": F.lag("oper_result", 1).over(w),
+            "lag_result_2": F.lag("oper_result", 2).over(w),
+            "lag_result_3": F.lag("oper_result", 3).over(w),
+            "lag_trans_date": F.lag("trans_date", 3).over(w),
+        })
     )
     hits = seq.filter(
         (F.col("oper_result") == "SUCCESS")

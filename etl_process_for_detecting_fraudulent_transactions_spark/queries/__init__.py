@@ -106,9 +106,15 @@ _MODULES = (
 #   46-50 the 5 stalest never-edited r7-evidence keys
 #         (data_skew_profile .. domain_mix_sample) — starts clearing the
 #         r7 debt the r12-opt amendment had to postpone.
+# Since then scd2_snapshot_diff and pit_join_events went to the front:
+# operators/scd2.py, which both use, changed after their r10 evidence,
+# which pushed merge_upsert and domain_mix_sample past position 50.
 # After position 50: the remaining r7 keys, then r8 in rotation_check
 # order — any budget overflow lands next-stalest.
 _PRIORITY_KEYS = (
+    # -- operators/scd2.py rewritten (two anti joins) after r10 evidence --
+    "scd2_snapshot_diff",
+    "pit_join_events",
     # -- edited in r12-opt, r10 evidence (stalest edited tier) --
     "lang_id_markers",
     "doc_fingerprint",
@@ -161,9 +167,9 @@ _PRIORITY_KEYS = (
     "data_skew_profile",
     "k_anonymity_profile",
     "l_diversity_events",
+    # ---- window boundary (the first 50 keys are checked each round) ----
     "merge_upsert",
     "domain_mix_sample",
-    # ---- window boundary (driver checks ~50) ----
     # -- overflow: remaining r7-stale, then r8-stale in rotation order --
     "per_source_cap",
     "range_join_events",

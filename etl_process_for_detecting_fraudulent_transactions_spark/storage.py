@@ -9,7 +9,16 @@ billion-key dimension scale.
 ``overwrite_swap`` exists because Spark cannot safely overwrite a parquet
 directory that feeds the plan being written: we materialize to a temp dir,
 then swap directories. On HDFS/S3 the same pattern holds (write-new +
-atomic pointer/rename).
+atomic pointer/rename). The swap never leaves the table absent: the old
+directory is renamed aside to ``<name>.__old__`` before the new one takes
+its place and is deleted only after; if a crash strands it there, the next
+``read`` or ``overwrite_swap`` moves it back.
+
+Both writers ``rebalance`` their output by the partition columns, so each
+write produces one file per partition at daily-batch size (the scan
+partitions of a small input would otherwise each write a file, and the
+history's file count would reproduce itself day after day), while AQE still
+splits a large output by data volume.
 """
 
 from __future__ import annotations
@@ -35,7 +44,14 @@ class ParquetStore:
     def exists(self, name: str) -> bool:
         return os.path.isdir(self.path(name))
 
+    def _restore(self, name: str) -> None:
+        """Put back a table that a crashed ``overwrite_swap`` left renamed aside."""
+        final = self.path(name)
+        if not os.path.isdir(final) and os.path.isdir(final + ".__old__"):
+            os.replace(final + ".__old__", final)
+
     def read(self, name: str, schema: StructType | None = None) -> DataFrame:
+        self._restore(name)
         if not self.exists(name):
             if schema is None:
                 raise FileNotFoundError(self.path(name))
@@ -46,19 +62,23 @@ class ParquetStore:
         return reader.parquet(self.path(name))
 
     def append(self, df: DataFrame, name: str, partition_by: list[str] | None = None) -> None:
-        w = df.write.mode("append")
+        w = df.hint("rebalance", *(partition_by or [])).write.mode("append")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(self.path(name))
 
     def overwrite_swap(self, df: DataFrame, name: str) -> None:
         """Safe overwrite even when ``df`` reads from the target path."""
-        tmp = self.path(name) + ".__tmp__"
-        shutil.rmtree(tmp, ignore_errors=True)
-        df.write.mode("overwrite").parquet(tmp)
+        self._restore(name)
         final = self.path(name)
-        shutil.rmtree(final, ignore_errors=True)
+        tmp, old = final + ".__tmp__", final + ".__old__"
+        shutil.rmtree(tmp, ignore_errors=True)
+        df.hint("rebalance").write.mode("overwrite").parquet(tmp)
+        shutil.rmtree(old, ignore_errors=True)
+        if os.path.isdir(final):
+            os.replace(final, old)
         os.replace(tmp, final)
+        shutil.rmtree(old, ignore_errors=True)
 
 
 def write_bucketed(

@@ -3,6 +3,7 @@ import importlib.util
 import os
 import shutil
 import sys
+from collections import Counter
 
 import pytest
 
@@ -72,8 +73,10 @@ def fraud_run(spark, fraud_corpus, tmp_path_factory):
 
     Per day: the frame ``run_day`` returns, its collected rows, the terminal
     history it left behind, the frames it wrote (``overwrite_swap`` and
-    ``append`` by table name) and the Spark jobs the day ran, read-back
-    included."""
+    ``append`` by table name), the Spark jobs the day ran (read-back
+    included), the job group ``overwrite_swap`` ran under, the jobs that ran
+    outside any group meanwhile, and the parquet files per store directory
+    after the day."""
     from etl_process_for_detecting_fraudulent_transactions_spark.plans.pipeline import (
         HIST,
         PipelineState,
@@ -93,7 +96,13 @@ def fraud_run(spark, fraud_corpus, tmp_path_factory):
 
         def overwrite_swap(self, df, name):
             self.written[name] = df
+            self.swap_group = spark.sparkContext.getLocalProperty("spark.jobGroup.id")
             super().overwrite_swap(df, name)
+
+    def parquet_files(root):
+        found = Counter(os.path.relpath(d, root) for d, _dirs, files in os.walk(root)
+                        for f in files if f.endswith(".parquet"))
+        return dict(found)
 
     base = tmp_path_factory.mktemp("fraud_run")
     data_dir = str(base / "in" / "data")
@@ -104,12 +113,14 @@ def fraud_run(spark, fraud_corpus, tmp_path_factory):
     for day in fraud_corpus.dates:
         stage_day(fraud_corpus, day, data_dir)
         group = f"fraud_run:{day:%d%m%Y}"
+        ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
         sc.setJobGroup(group, group)
         try:
             report = run_day(spark, state, data_dir, run_ts=day_run_ts(day))
             rows = report.collect()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
+        ungrouped = sorted(set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped)
         days.append({
             "day": day,
             "report": report,
@@ -117,5 +128,8 @@ def fraud_run(spark, fraud_corpus, tmp_path_factory):
             "hist": state.store.read(HIST, DIM_TERMINALS_HIST).collect(),
             "written": dict(state.store.written),
             "jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
+            "swap_group": state.store.swap_group,
+            "ungrouped_jobs": ungrouped,
+            "files": parquet_files(state.store.root),
         })
     return days

@@ -4,7 +4,7 @@ The seed dims, the xlsx snapshots and a not-yet-written store table are
 built on the driver. They must plan as ``LocalRelation`` (real size stats)
 rather than an RDD scan of unbounded estimated size, so the planner
 broadcasts them: the day's writes then carry no sort-merge join, and a warm
-day runs at most 30 Spark jobs instead of 45. Checked on a generated K=1
+day runs at most 22 Spark jobs instead of 45. Checked on a generated K=1
 corpus against the DuckDB rules oracle and the SCD2 replay.
 """
 
@@ -73,10 +73,28 @@ def test_run_day_writes_plan_no_sort_merge_join(fraud_run):
 
 
 def test_warm_day_job_count(fraud_run):
-    """A warm day (SCD2 swap, mart append and read-back) runs at most 30
-    Spark jobs; with RDD-scanned dims it ran 45."""
+    """A warm day (SCD2 swap, mart append and read-back) runs at most 22
+    Spark jobs; with RDD-scanned dims it ran 45, with the Q1 distinct, the
+    Q3 groupBy and one write file per scan partition 25."""
     warm = fraud_run[1]
-    assert 0 < warm["jobs"] <= 30, warm["jobs"]
+    assert 0 < warm["jobs"] <= 22, warm["jobs"]
+
+
+def test_swap_jobs_count_in_callers_job_group(fraud_run):
+    """The SCD2 swap runs on a worker thread; its jobs must still carry the
+    caller's job group, or they would silently drop out of the day's count."""
+    for day in fraud_run:
+        assert day["swap_group"] == f"fraud_run:{day['day']:%d%m%Y}", day["swap_group"]
+        assert day["ungrouped_jobs"] == [], day["ungrouped_jobs"]
+
+
+def test_each_write_is_one_file(fraud_run):
+    """The history rewrite and each day's mart slice are one parquet file
+    apiece at daily-batch size, every day (the history does not inherit
+    the scan partitioning of its previous version)."""
+    for i, day in enumerate(fraud_run):
+        want = {HIST: 1, **{f"{REPORT}/report_date={d}": 1 for d in (x["day"] for x in fraud_run[:i + 1])}}
+        assert day["files"] == want, (day["day"], day["files"])
 
 
 def test_run_day_matches_oracles(fraud_run, fraud_corpus):

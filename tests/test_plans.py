@@ -83,6 +83,72 @@ def test_run_day_read_back_prunes_to_the_day(fraud_run):
     assert "isnotnull(report_date" in pf and f"= {day['day'].isoformat()})" in pf, pf
 
 
+@pytest.fixture(scope="module")
+def day_inputs(spark, fraud_corpus):
+    """The first corpus day's rule inputs, built as run_day builds them; the
+    terminal history is that day's SCD2 load of an empty history."""
+    import datetime as dt
+    import os
+
+    from tests.conftest import perfbench_module
+
+    from etl_process_for_detecting_fraudulent_transactions_spark.operators.scd2 import scd2_apply_snapshot
+    from etl_process_for_detecting_fraudulent_transactions_spark.plans.ingest import (
+        typed_blacklist,
+        typed_transactions,
+    )
+    from etl_process_for_detecting_fraudulent_transactions_spark.schemas import (
+        BLACKLIST_RAW,
+        DIM_TERMINALS_HIST,
+        TERMINALS_SNAPSHOT,
+    )
+    from etl_process_for_detecting_fraudulent_transactions_spark.sources.csv_source import (
+        read_transactions_csv,
+        split_corrupt,
+    )
+    from etl_process_for_detecting_fraudulent_transactions_spark.sources.local import local_frame
+    from etl_process_for_detecting_fraudulent_transactions_spark.sources.seed_source import read_seed_dims
+    from etl_process_for_detecting_fraudulent_transactions_spark.sources.xlsx_source import read_xlsx_df
+
+    day = fraud_corpus.dates[0]
+    tag = perfbench_module("corpus").ddmmyyyy(day)
+    xlsx = lambda name, schema: read_xlsx_df(  # noqa: E731
+        spark, os.path.join(fraud_corpus.data_dir, f"{name}_{tag}.xlsx"), schema)
+    dims = read_seed_dims(spark, fraud_corpus.seed_path)
+    return {
+        "day": day,
+        "transactions": typed_transactions(split_corrupt(read_transactions_csv(spark, fraud_corpus.tx_path(day)))[0]),
+        "blacklist": typed_blacklist(xlsx("passport_blacklist", BLACKLIST_RAW)),
+        "hist": scd2_apply_snapshot(local_frame(spark, [], DIM_TERMINALS_HIST), xlsx("terminals", TERMINALS_SNAPSHOT),
+                                    run_ts=dt.datetime.combine(day, dt.time(23, 0))),
+        "dims": (dims["cards"], dims["accounts"], dims["clients"]),
+    }
+
+
+def test_city_fraud_is_one_card_exchange(day_inputs):
+    """Q3 counts each card's distinct cities in the same window pass as its
+    leads: one hash exchange on card_num, no distinct aggregate, and no
+    broadcast of a card set back into the fact."""
+    from etl_process_for_detecting_fraudulent_transactions_spark.plans.rules import city_fraud
+
+    plan = _plan(city_fraud(day_inputs["transactions"], day_inputs["hist"], *day_inputs["dims"]))
+    assert plan.count("Exchange hashpartitioning(card_num") == 1, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "count(distinct" not in plan, plan
+
+
+def test_passport_fraud_blacklist_is_existence_join(day_inputs):
+    """Q1 tests blacklist membership as a broadcast ExistenceJoin: no
+    distinct over the blacklist, so no aggregate and no shuffle."""
+    from etl_process_for_detecting_fraudulent_transactions_spark.plans.rules import passport_fraud
+
+    plan = _plan(passport_fraud(day_inputs["transactions"], *day_inputs["dims"], day_inputs["blacklist"],
+                                day_inputs["day"]))
+    assert "ExistenceJoin" in plan, plan
+    assert "HashAggregate" not in plan, plan
+    assert "Exchange hashpartitioning" not in plan, plan
+
+
 def test_topk_uses_take_ordered_not_global_sort(spark, sf_dir):
     """ORDER BY + LIMIT compiles to TakeOrderedAndProject (per-partition
     partial top-k), not a full global sort."""
