@@ -3,33 +3,45 @@
 The reference mutates a history table in place — anti-joins for new/deleted
 rows, an equi-join with attribute-inequality residual for changed rows, then
 two UPDATEs + three INSERTs (py_scripts/data_to_db.py:145-295). Spark has no
-in-place UPDATE, and a Spark-first design doesn't want one: we classify the
-snapshot against the current version set with TWO broadcast-able anti joins
-— snapshot ▷ unchanged current (new or changed) plus current ▷ snapshot
-(deleted), the exact decomposition of a full outer on a unique key — and
-emit the new history as ``untouched ∪ closed ∪ opened``, a deterministic,
-testable transform with an injectable ``run_ts``. (A single full-outer
-classify was the round-1 shape; Spark executes full outer only as sort-merge
-and AQE may never demote it to broadcast, so the decomposed form wins at dim
-scale.)
+in-place UPDATE, and a Spark-first design doesn't want one: the new history
+is a deterministic, testable transform of (history, snapshot) with an
+injectable ``run_ts``, computed in ONE keyed pass. History and snapshot rows
+are unioned and partitioned by the natural key once; per key, a window
+collects the current versions and the snapshot's rows, which is everything
+needed to classify each row (new or changed, deleted, affected), and one
+generator emits each row's output versions: the kept or closed history row,
+its tombstone, the opened row. (Round 1 classified with a full outer join,
+which Spark runs only as sort-merge; its successor, two anti joins feeding
+a semi and an anti join, was 5 dependent jobs on a 150-row dimension.)
 
 Scale notes (100 TB design): dimension history ≪ facts, so a full rewrite per
-load is cheap; the classify join shuffles only by the natural key (or
-broadcasts when the snapshot is small — Catalyst/AQE picks this). For a
-billion-key dimension you'd swap the writer for Delta MERGE; the classifier
-here stays the same.
+load is cheap; the pass is one shuffle of history ∪ snapshot by key, whose
+output AQE coalesces to one partition at dimension size. For a billion-key
+dimension you'd swap the writer for Delta MERGE; the classifier here stays
+the same.
 
 Semantics replicated exactly:
 - "current" = open (effective_to = HIGH_TS), non-deleted versions
   (the reference's view probes current_timestamp BETWEEN from AND to with
   deleted_flg = 0; with monotone load timestamps these coincide).
+- a snapshot row is unchanged when it equals ANY current version of its key
+  (the reference's join); each snapshot row is classified on its own, so a
+  duplicated key opens one row per changed copy.
 - changed-detection uses NULL-blind ``<>`` on each attribute, so NULL↔value
   transitions are missed — faithful to the reference (SURVEY §2.3 J4);
   ``null_safe_diff=True`` gives the fixed behavior.
+- a NULL key never matches, as with the reference's ``=``: a NULL-key
+  snapshot row always opens a live row, a NULL-key current row is never
+  closed and gains a tombstone on every load.
 - closing sets effective_to = run_ts - 1s on ALL open rows of affected keys
   (the reference's UPDATE has no deleted_flg filter).
 - deleted keys are closed AND re-inserted as an open row with deleted_flg=1
   carrying the last-known attributes.
+- new keys are affected too, so a re-added key's open TOMBSTONE gets closed
+  (the reference never closes it — data_to_db.py:209-271 only updates
+  changed/deleted keys — leaving two open rows per re-added terminal; that
+  latent bug is not replicated: hist invariants > bug parity here, and the
+  bundled data never re-adds a deleted terminal).
 """
 
 from __future__ import annotations
@@ -37,7 +49,7 @@ from __future__ import annotations
 import datetime as _dt
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 HIGH_TS = _dt.datetime(2999, 12, 31, 23, 59, 59)
@@ -64,67 +76,49 @@ def scd2_apply_snapshot(
     ``hist`` may be empty (first load) but must carry the hist schema
     (key, *attrs, effective_from, effective_to, deleted_flg).
     """
-    cols = [key, *attrs]
     close_ts = run_ts - _dt.timedelta(seconds=1)
 
-    cur = current_view(hist, key).select(cols)
-    snap = snapshot.select(cols)
+    def same(a, b):
+        if null_safe_diff:
+            eq = [a[x].eqNullSafe(b[x]) for x in attrs]
+        else:
+            # NULL-blind <>, faithful to the reference's changed-rows join: a
+            # NULL on either side never counts as a change
+            eq = [~F.coalesce(a[x] != b[x], F.lit(False)) for x in attrs]
+        return reduce(lambda p, q: p & q, eq)
 
-    # Classify in two anti joins instead of one full outer: Spark executes
-    # a full-outer equi-join only as sort-merge (broadcast hash doesn't
-    # support it), which put 6 SMJs in the r1 plan audit. snap ▷ unchanged
-    # cur (new or changed) + cur ▷ snap (deleted) covers the same split on a
-    # unique key. An anti join is planned at its left side's size, so every
-    # join downstream of these two still sees a dim-sized input and
-    # broadcasts; a left outer join is planned at the product of its sides'
-    # sizes, which turned the close/keep joins into sort-merge joins.
-    s = snap.alias("s")
-    c = cur.alias("c")
-    if null_safe_diff:
-        same = [F.col(f"s.{x}").eqNullSafe(F.col(f"c.{x}")) for x in attrs]
-    else:
-        # NULL-blind <>, faithful to the reference's changed-rows join: a
-        # NULL on either side never counts as a change
-        same = [~F.coalesce(F.col(f"s.{x}") != F.col(f"c.{x}"), F.lit(False)) for x in attrs]
-    unchanged = reduce(lambda a, b: a & b, same, F.col(f"s.{key}") == F.col(f"c.{key}"))
-    new_or_changed = s.join(c, unchanged, "left_anti")
-    # both frames are read twice (affected keys + opened rows) but are
-    # dim-scale: recomputing a broadcast join over ~150 rows costs less than
-    # the jobs a cache adds, and a cache here would stay pinned for the
-    # lifetime of a long-running multi-day ingest
-    deleted = cur.join(snap.select(key), key, "left_anti")
+    def changed(row):
+        return ~F.exists("cur_versions", lambda c: same(row, c))
 
-    # new keys are included so that a re-added key's open TOMBSTONE gets
-    # closed (the reference never closes it — data_to_db.py:209-271 only
-    # updates changed/deleted keys — leaving two open rows per re-added
-    # terminal; that latent bug is not replicated: hist invariants > bug
-    # parity here, and the bundled data never re-adds a deleted terminal)
-    affected_keys = new_or_changed.select(key).unionByName(deleted.select(key))
+    def version(**values):
+        return F.struct(*[values.get(c, F.col(c)).alias(c) for c in hist.columns])
 
-    # close ALL open rows (any deleted_flg) of affected keys — reference UPDATE
-    # matches on key + open effective_to only (data_to_db.py:227-232, 251-256)
-    open_rows = hist.filter(F.col("effective_to") == F.lit(HIGH_TS))
-    untouched = hist.filter(F.col("effective_to") != F.lit(HIGH_TS)).unionByName(
-        open_rows.join(affected_keys, key, "left_anti")
-    )
-    closed = open_rows.join(affected_keys, key, "semi").withColumn(
-        "effective_to", F.lit(close_ts)
-    )
+    snap = F.col("from_snapshot")
+    is_open = F.col("effective_to") == F.lit(HIGH_TS)
+    is_current = ~snap & is_open & (F.col("deleted_flg") == 0)
+    keyed = F.col(key).isNotNull()
 
-    opened_live = (
-        new_or_changed.withColumn("effective_from", F.lit(run_ts))
-        .withColumn("effective_to", F.lit(HIGH_TS))
-        .withColumn("deleted_flg", F.lit(0))
-    )
-    opened_deleted = (
-        deleted.select(key, *attrs)
-        .withColumn("effective_from", F.lit(run_ts))
-        .withColumn("effective_to", F.lit(HIGH_TS))
-        .withColumn("deleted_flg", F.lit(1))
-    )
+    w = Window.partitionBy(key)
+    tagged = hist.withColumn("from_snapshot", F.lit(False)).unionByName(
+        snapshot.select(key, *attrs).withColumn("from_snapshot", F.lit(True)),
+        allowMissingColumns=True,
+    ).withColumns({
+        "cur_versions": F.collect_list(F.when(is_current, F.struct(*attrs))).over(w),
+        "snap_versions": F.collect_list(F.when(snap, F.struct(*attrs))).over(w),
+    })
 
-    return (
-        untouched.unionByName(closed)
-        .unionByName(opened_live)
-        .unionByName(opened_deleted)
+    no_snapshot_row = ~keyed | (F.size("snap_versions") == 0)
+    affected = keyed & (
+        F.exists("snap_versions", changed)
+        | ((F.size("cur_versions") > 0) & (F.size("snap_versions") == 0))
     )
+    kept_or_closed = F.when(~snap, version(
+        effective_to=F.when(is_open & affected, F.lit(close_ts)).otherwise(F.col("effective_to"))
+    ))
+    tombstone = F.when(is_current & no_snapshot_row, version(
+        effective_from=F.lit(run_ts), effective_to=F.lit(HIGH_TS), deleted_flg=F.lit(1)
+    ))
+    opened = F.when(snap & (~keyed | changed(F.struct(*attrs))), version(
+        effective_from=F.lit(run_ts), effective_to=F.lit(HIGH_TS), deleted_flg=F.lit(0)
+    ))
+    return tagged.select(F.inline(F.array_compact(F.array(kept_or_closed, tombstone, opened))))

@@ -10,9 +10,12 @@ unexecuted logical plans); only terminals-hist and the report mart persist
 Ordering: every input is read before the history is touched (the seed dump
 and xlsx files parsed, the CSV resolved), so a missing or malformed file
 fails the day with the store unchanged. The SCD2 swap then runs on a worker
-thread, inside the caller's job group, while the calling thread plans Q1, Q2
-and Q4, which never read the history. Q3 is planned on the swapped history, and the
-mart append starts only after the swap has committed.
+thread, inside the caller's job group, while the calling thread plans
+everything that never reads the history: the Q1/Q2 candidates, Q4's hits
+and the flagged account and client sides. Q3's events are planned on the
+swapped history; the day's events then go through ONE card → account →
+client lookup chain (``rules.fraud_rows``), and the mart append starts only
+after the swap has committed.
 
 Determinism: ``run_ts`` is injected everywhere the reference stamps wall
 clock (SCD2 effective_from/to, report_dt) so golden replays are exact.
@@ -38,7 +41,14 @@ from ..sources.xlsx_source import read_xlsx_df
 from ..storage import ParquetStore
 from .ingest import typed_blacklist, typed_transactions
 from .report import stamp, union_rules
-from .rules import account_fraud, city_fraud, guessing_amount_fraud, passport_fraud
+from .rules import (
+    city_events,
+    flagged_accounts,
+    flagged_clients,
+    fraud_rows,
+    guessing_events,
+    transaction_events,
+)
 
 HIST = "dwh_dim_terminals_hist"
 REPORT = "rep_fraud"
@@ -87,19 +97,18 @@ def run_day(
     snapshot = read_xlsx_df(spark, term_path, TERMINALS_SNAPSHOT)
     new_hist = scd2_apply_snapshot(state.store.read(HIST, DIM_TERMINALS_HIST), snapshot, run_ts=ts)
 
-    cards, accounts, clients = dims["cards"], dims["accounts"], dims["clients"]
     with ThreadPoolExecutor(max_workers=1) as pool:
         swap = pool.submit(inheritable_thread_target(spark)(state.store.overwrite_swap), new_hist, HIST)
-        passport = passport_fraud(transactions, cards, accounts, clients, blacklist, iso)
-        account = account_fraud(transactions, cards, accounts, clients, iso)
-        guessing = guessing_amount_fraud(transactions, cards, accounts, clients)
+        events = [transaction_events(transactions), guessing_events(transactions)]
+        accounts = flagged_accounts(dims["accounts"], iso)
+        clients = flagged_clients(dims["clients"], blacklist, iso)
         swap.result()
-    city = city_fraud(
-        transactions, state.store.read(HIST, DIM_TERMINALS_HIST), cards, accounts, clients,
+    events.append(city_events(
+        transactions, state.store.read(HIST, DIM_TERMINALS_HIST),
         compat_time_filter=state.compat_time_filter,
         compat_hist_join=state.compat_hist_join,
-    )
-    report = stamp(union_rules([passport, account, city, guessing]), ts)
+    ))
+    report = stamp(fraud_rows(union_rules(events), dims["cards"], accounts, clients), ts)
     state.store.append(report, REPORT, partition_by=["report_date"])
 
     if state.archive:

@@ -4,18 +4,29 @@ Each rule takes the day's typed DataFrames and returns report-shaped rows
 (event_dt, passport, fio, phone, event_type) — lazy plans; the caller appends
 them to REP_FRAUD with a stamped report_dt.
 
+One lookup chain per day. Every rule reduces to events ``(card_num,
+event_dt, event_type)`` run through ONE left chain card → account → client
+(``fraud_rows``): each transaction once with a NULL type (the Q1/Q2
+candidates), Q3's per-card maximum and Q4's hits with their own types. The
+account side carries ``account_expired`` (Q2) and the client side
+``passport_invalid`` (Q1); one generator then emits ``passport_fraud``,
+``account_fraud`` or the event's type. A set flag implies that every hop up
+to it matched, so emitting a row only for a set flag reproduces Q1's and
+Q2's inner joins, duplicate dimension keys included. ``run_day`` unions the
+day's events and runs the chain once; each public rule is the same chain
+over its own events with only its own flag set, so every rule predicate has
+one copy.
+
 Scale notes: all dims (cards/accounts/clients/blacklist/terminals-hist) are
 small relative to the fact. The seed dims and the blacklist arrive as local
 relations (``sources.local.local_frame``) whose size stats let the planner
 broadcast them; the card→account→client lookups and Q1's blacklist EXISTS
 test (a broadcast existence join) carry no hint, while the terminals-hist
 lookup adds an explicit ``broadcast`` — on a 1000-executor cluster the fact
-never shuffles for these joins. Q2, Q3 and Q4 share one lookup chain
-(``_identity_by_card``), so a day's plans build the card and client
-broadcasts once. The only fact shuffles are Q3's and Q4's per-card windows:
-each rule has exactly one ``card_num`` exchange, over its own input (Q3
-every transaction, Q4 the PAYMENT/WITHDRAW rows), and neither broadcasts
-anything fact-sized. AQE handles hot-card skew.
+never shuffles for these joins. The only fact shuffles are Q3's and Q4's
+per-card windows: each has exactly one ``card_num`` exchange, over its own
+input (Q3 every transaction, Q4 the PAYMENT/WITHDRAW rows), and neither
+broadcasts anything fact-sized. AQE handles hot-card skew.
 """
 
 from __future__ import annotations
@@ -29,29 +40,79 @@ from ..functions.casts import fio_concat, int_amount, minutes_between
 from ..operators.scd2 import current_view
 
 
-def _identity_by_card(events: DataFrame, cards: DataFrame, accounts: DataFrame,
-                      clients: DataFrame, event_type: str, how: str = "left") -> DataFrame:
-    """Identity lookup chain card→account→client shared by Q2-Q4
-    (rep_fraud.py:81-98, 151-165, 229-242). ``how`` applies to the card and
-    account hops (Q2 keeps only cards of expired accounts); the client hop is
-    always left."""
+def flagged_accounts(accounts: DataFrame, run_date: _dt.date | None = None) -> DataFrame:
+    """The account hop's side. With ``run_date`` it adds ``account_expired``:
+    expired strictly before run_date (Q2, rep_fraud.py:59-106); NULL
+    valid_to never expires."""
+    cols = [F.col("account_num"), F.col("client")]
+    if run_date is not None:
+        cols.append((F.lit(run_date) > F.col("valid_to")).alias("account_expired"))
+    return accounts.select(cols)
+
+
+def flagged_clients(clients: DataFrame, blacklist: DataFrame | None = None,
+                    run_date: _dt.date | None = None) -> DataFrame:
+    """The client hop's side. With ``blacklist`` and ``run_date`` it adds
+    ``passport_invalid``: the passport expired strictly before run_date or
+    is blacklisted (Q1, rep_fraud.py:6-55).
+
+    Blacklist membership deliberately ignores entry_dt (cumulative file ⇒
+    membership test, SURVEY §2.2 P3). Strict ``>``: a passport expiring ON
+    run_date is still valid. NULL passport_valid_to never matches.
+    """
+    cols = [
+        F.col("client_id"),
+        F.col("passport_num"),
+        fio_concat("last_name", "first_name", "patrinymic").alias("fio"),
+        F.col("phone"),
+    ]
+    if blacklist is not None:
+        # an EXISTS, OR-ed with the expiry test, plans as a broadcast
+        # ExistenceJoin: a blacklist that lists a passport twice still
+        # yields one client row
+        listed = blacklist.alias("b").where(
+            F.col("b.passport_num") == F.col("c.passport_num").outer()
+        ).exists()
+        cols.append(((F.lit(run_date) > F.col("c.passport_valid_to")) | listed).alias("passport_invalid"))
+    return clients.alias("c").select(cols)
+
+
+def transaction_events(transactions: DataFrame) -> DataFrame:
+    """Every transaction once, with a NULL event type: the Q1/Q2 candidates."""
+    return transactions.select(
+        "card_num", F.col("trans_date").alias("event_dt"), F.lit(None).cast("string").alias("event_type")
+    )
+
+
+def fraud_rows(events: DataFrame, cards: DataFrame, accounts: DataFrame, clients: DataFrame) -> DataFrame:
+    """Report rows for ``events`` through the identity chain card → account
+    → client, every hop left (rep_fraud.py:81-98, 151-165, 229-242).
+    ``accounts`` and ``clients`` come from ``flagged_accounts`` and
+    ``flagged_clients``. A typed event yields one row of its type; a
+    candidate (NULL type) yields ``passport_fraud`` if its client's passport
+    is invalid and ``account_fraud`` if its account is expired. A side built
+    without its flag never sets it; the flag is then a constant the
+    optimizer folds away, so a single rule's sides stay plain enough to
+    share their broadcasts with the other rules."""
+    def flag(side: DataFrame, name: str):
+        return F.col(name) if name in side.columns else F.lit(False)
+
+    types = F.when(F.col("event_type").isNotNull(), F.array("event_type")).otherwise(
+        F.array_compact(F.array(
+            F.when(flag(clients, "passport_invalid"), F.lit("passport_fraud")),
+            F.when(flag(accounts, "account_expired"), F.lit("account_fraud")),
+        ))
+    )
     return (
-        events.join(cards.select("card_num", "account_num"), "card_num", how)
-        .join(accounts.select("account_num", "client"), "account_num", how)
-        .join(
-            clients.select(
-                "client_id", "passport_num", "last_name", "first_name",
-                "patrinymic", "phone",
-            ),
-            F.col("client") == F.col("client_id"),
-            "left",
-        )
+        events.join(cards.select("card_num", "account_num"), "card_num", "left")
+        .join(accounts, "account_num", "left")
+        .join(clients, F.col("client") == F.col("client_id"), "left")
         .select(
             "event_dt",
             F.col("passport_num").alias("passport"),
-            fio_concat("last_name", "first_name", "patrinymic").alias("fio"),
+            "fio",
             "phone",
-            F.lit(event_type).alias("event_type"),
+            F.explode(types).alias("event_type"),
         )
     )
 
@@ -65,43 +126,10 @@ def passport_fraud(
     run_date: _dt.date,
 ) -> DataFrame:
     """Q1: transactions by clients with an expired (strictly before run_date)
-    or blacklisted passport; one row per transaction (rep_fraud.py:6-55).
-
-    Blacklist membership deliberately ignores entry_dt (cumulative file ⇒
-    membership test, SURVEY §2.2 P3). Strict ``>``: a passport expiring ON
-    run_date is still valid. NULL passport_valid_to never matches.
-    """
-    # EXISTS, OR-ed with the expiry test, plans as a broadcast ExistenceJoin:
-    # a blacklist that lists a passport twice still yields one client row
-    listed = blacklist.alias("b").where(
-        F.col("b.passport_num") == F.col("c.passport_num").outer()
-    ).exists()
-    invalid_clients = (
-        clients.alias("c")
-        .filter((F.lit(run_date) > F.col("c.passport_valid_to")) | listed)
-        .select(
-            "client_id",
-            fio_concat("last_name", "first_name", "patrinymic").alias("fio"),
-            "passport_num",
-            "phone",
-        )
-    )
-    return (
-        transactions.join(cards.select("card_num", "account_num"), "card_num", "inner")
-        .join(accounts.select("account_num", "client"), "account_num", "inner")
-        .join(
-            invalid_clients,
-            F.col("client") == F.col("client_id"),
-            "inner",
-        )
-        .select(
-            F.col("trans_date").alias("event_dt"),
-            F.col("passport_num").alias("passport"),
-            "fio",
-            "phone",
-            F.lit("passport_fraud").alias("event_type"),
-        )
-    )
+    or blacklisted passport (``flagged_clients``); one row per transaction
+    (rep_fraud.py:6-55)."""
+    return fraud_rows(transaction_events(transactions), cards, flagged_accounts(accounts),
+                      flagged_clients(clients, blacklist, run_date))
 
 
 def account_fraud(
@@ -111,20 +139,16 @@ def account_fraud(
     clients: DataFrame,
     run_date: _dt.date,
 ) -> DataFrame:
-    """Q2: transactions on accounts expired strictly before run_date; client
-    identity via LEFT join (account kept even without a client)
-    (rep_fraud.py:59-106)."""
-    events = transactions.select("card_num", F.col("trans_date").alias("event_dt"))
-    expired = accounts.filter(F.lit(run_date) > F.col("valid_to"))
-    return _identity_by_card(events, cards, expired, clients, "account_fraud", how="inner")
+    """Q2: transactions on accounts expired strictly before run_date
+    (``flagged_accounts``); client identity via LEFT join (account kept even
+    without a client) (rep_fraud.py:59-106)."""
+    return fraud_rows(transaction_events(transactions), cards, flagged_accounts(accounts, run_date),
+                      flagged_clients(clients))
 
 
-def city_fraud(
+def city_events(
     transactions: DataFrame,
     terminals_hist: DataFrame,
-    cards: DataFrame,
-    accounts: DataFrame,
-    clients: DataFrame,
     compat_time_filter: bool = True,
     compat_hist_join: bool = True,
 ) -> DataFrame:
@@ -167,16 +191,26 @@ def city_fraud(
         (F.col("terminal_city") != F.col("lead_terminal_city")) & time_ok
     )
 
-    events = flagged.groupBy("card_num").agg(F.max("trans_date").alias("event_dt"))
-    return _identity_by_card(events, cards, accounts, clients, "city_fraud")
+    return flagged.groupBy("card_num").agg(
+        F.max("trans_date").alias("event_dt"), F.lit("city_fraud").alias("event_type")
+    )
 
 
-def guessing_amount_fraud(
+def city_fraud(
     transactions: DataFrame,
+    terminals_hist: DataFrame,
     cards: DataFrame,
     accounts: DataFrame,
     clients: DataFrame,
+    compat_time_filter: bool = True,
+    compat_hist_join: bool = True,
 ) -> DataFrame:
+    """Q3's events (``city_events``) with each card's identity."""
+    events = city_events(transactions, terminals_hist, compat_time_filter, compat_hist_join)
+    return fraud_rows(events, cards, flagged_accounts(accounts), flagged_clients(clients))
+
+
+def guessing_events(transactions: DataFrame) -> DataFrame:
     """Q4: a SUCCESS whose 3 predecessors (PAYMENT/WITHDRAW only, per card,
     time-ordered) are REJECTs with strictly decreasing integer amounts, the
     whole chain within 20 minutes (rep_fraud.py:187-261).
@@ -201,7 +235,7 @@ def guessing_amount_fraud(
             "lag_trans_date": F.lag("trans_date", 3).over(w),
         })
     )
-    hits = seq.filter(
+    return seq.filter(
         (F.col("oper_result") == "SUCCESS")
         & (F.col("lag_result_1") == "REJECT")
         & (F.col("lag_result_2") == "REJECT")
@@ -210,5 +244,14 @@ def guessing_amount_fraud(
         & (F.col("lag_amt_3") > F.col("lag_amt_2"))
         & (F.col("lag_amt_2") > F.col("lag_amt_1"))
         & (F.col("lag_amt_1") > F.col("amt_int"))
-    ).select("card_num", F.col("trans_date").alias("event_dt"))
-    return _identity_by_card(hits, cards, accounts, clients, "guessing_amount_fraud")
+    ).select("card_num", F.col("trans_date").alias("event_dt"), F.lit("guessing_amount_fraud").alias("event_type"))
+
+
+def guessing_amount_fraud(
+    transactions: DataFrame,
+    cards: DataFrame,
+    accounts: DataFrame,
+    clients: DataFrame,
+) -> DataFrame:
+    """Q4's hits (``guessing_events``) with each card's identity."""
+    return fraud_rows(guessing_events(transactions), cards, flagged_accounts(accounts), flagged_clients(clients))

@@ -112,7 +112,7 @@ _MODULES = (
 # After position 50: the remaining r7 keys, then r8 in rotation_check
 # order — any budget overflow lands next-stalest.
 _PRIORITY_KEYS = (
-    # -- operators/scd2.py rewritten (two anti joins) after r10 evidence --
+    # -- operators/scd2.py rewritten (one keyed window pass) after r10 evidence --
     "scd2_snapshot_diff",
     "pit_join_events",
     # -- edited in r12-opt, r10 evidence (stalest edited tier) --

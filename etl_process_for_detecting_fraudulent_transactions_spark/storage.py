@@ -12,13 +12,16 @@ then swap directories. On HDFS/S3 the same pattern holds (write-new +
 atomic pointer/rename). The swap never leaves the table absent: the old
 directory is renamed aside to ``<name>.__old__`` before the new one takes
 its place and is deleted only after; if a crash strands it there, the next
-``read`` or ``overwrite_swap`` moves it back.
+``read`` or ``overwrite_swap`` moves it back. ``compact_small_files``
+publishes through the same two renames.
 
-Both writers ``rebalance`` their output by the partition columns, so each
-write produces one file per partition at daily-batch size (the scan
-partitions of a small input would otherwise each write a file, and the
-history's file count would reproduce itself day after day), while AQE still
-splits a large output by data volume.
+``append`` ``rebalance``s its output by the partition columns, so each day's
+mart slice is one file per partition at daily-batch size (the scan
+partitions of a small input would otherwise each write a file), while AQE
+still splits a large output by data volume. ``overwrite_swap`` adds no
+exchange of its own: the SCD2 history it rewrites already comes out of a
+key exchange, which AQE coalesces to one partition (one file) at dimension
+size and splits by advisory size at scale.
 """
 
 from __future__ import annotations
@@ -44,14 +47,8 @@ class ParquetStore:
     def exists(self, name: str) -> bool:
         return os.path.isdir(self.path(name))
 
-    def _restore(self, name: str) -> None:
-        """Put back a table that a crashed ``overwrite_swap`` left renamed aside."""
-        final = self.path(name)
-        if not os.path.isdir(final) and os.path.isdir(final + ".__old__"):
-            os.replace(final + ".__old__", final)
-
     def read(self, name: str, schema: StructType | None = None) -> DataFrame:
-        self._restore(name)
+        _restore(self.path(name))
         if not self.exists(name):
             if schema is None:
                 raise FileNotFoundError(self.path(name))
@@ -69,16 +66,30 @@ class ParquetStore:
 
     def overwrite_swap(self, df: DataFrame, name: str) -> None:
         """Safe overwrite even when ``df`` reads from the target path."""
-        self._restore(name)
         final = self.path(name)
-        tmp, old = final + ".__tmp__", final + ".__old__"
+        _restore(final)
+        tmp = final + ".__tmp__"
         shutil.rmtree(tmp, ignore_errors=True)
-        df.hint("rebalance").write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(final):
-            os.replace(final, old)
-        os.replace(tmp, final)
-        shutil.rmtree(old, ignore_errors=True)
+        df.write.mode("overwrite").parquet(tmp)
+        _publish(tmp, final)
+
+
+def _restore(final: str) -> None:
+    """Put back a directory that a crashed ``_publish`` left renamed aside."""
+    if not os.path.isdir(final) and os.path.isdir(final + ".__old__"):
+        os.replace(final + ".__old__", final)
+
+
+def _publish(tmp: str, final: str) -> None:
+    """Move the fully written ``tmp`` into ``final``'s place. The live
+    directory is renamed aside, not deleted, until the new one is in place,
+    so a crash between the two renames leaves it for ``_restore``."""
+    old = final + ".__old__"
+    shutil.rmtree(old, ignore_errors=True)
+    if os.path.isdir(final):
+        os.replace(final, old)
+    os.replace(tmp, final)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def write_bucketed(
@@ -116,9 +127,9 @@ def compact_small_files(
 
     Strategy: measure the dataset's on-disk bytes from the filesystem (not
     from optimizer stats, which reflect pre-filter estimates), rewrite to
-    ceil(bytes / target_file_bytes) files, then atomically swap directories
-    — the same write-new-plus-rename contract ``overwrite_swap`` uses, so
-    readers never see a half-compacted dir.
+    ceil(bytes / target_file_bytes) files, then swap directories through
+    ``overwrite_swap``'s rename-aside publish, so readers never see a
+    half-compacted dir and a crash between the renames loses nothing.
 
     Unpartitioned layouts compact with ``coalesce`` (no shuffle — tasks
     just concatenate input splits); Hive-partitioned layouts must shuffle
@@ -129,6 +140,8 @@ def compact_small_files(
     """
     import math
 
+    path = path.rstrip("/")
+    _restore(path)
     before = 0
     total = 0
     for root, _dirs, files in os.walk(path):
@@ -138,7 +151,7 @@ def compact_small_files(
                 total += os.path.getsize(os.path.join(root, f))
     n_files = max(1, math.ceil(total / target_file_bytes))
     df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + ".__compact__"
+    tmp = path + ".__compact__"
     shutil.rmtree(tmp, ignore_errors=True)
     if partition_by:
         writer = (
@@ -149,8 +162,7 @@ def compact_small_files(
     else:
         writer = df.coalesce(n_files).write.mode("overwrite")
     writer.parquet(tmp)
-    shutil.rmtree(path, ignore_errors=True)
-    os.replace(tmp, path)
+    _publish(tmp, path)
     after = sum(
         1
         for root, _dirs, files in os.walk(path)

@@ -388,7 +388,7 @@ def passport_fraud_stream(
 
     The batch rule (plans/rules.py:passport_fraud) is a pure DataFrame
     transform built from stream-legal operators (broadcast stream-static
-    inner joins + filters), so the streaming variant IS the batch function —
+    left joins + a generator), so the streaming variant IS the batch function —
     same code path, zero divergence risk between modes. Stateless: no
     watermark needed, append output.
     """

@@ -3,9 +3,12 @@ rows/values, atomic swap, partition layout preserved."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from etl_process_for_detecting_fraudulent_transactions_spark import storage
 from etl_process_for_detecting_fraudulent_transactions_spark.storage import (
+    ParquetStore,
     compact_small_files,
 )
 
@@ -57,6 +60,39 @@ def test_compaction_keeps_hive_partitions(spark, tmp_path):
         assert "/day=" in f, f
     after = sorted(tuple(r) for r in spark.read.parquet(path).collect())
     assert after == before
+
+
+def test_compaction_crash_between_renames_keeps_previous_rows(spark, tmp_path, monkeypatch):
+    """Compaction publishes through the store's rename-aside swap: a crash
+    between its two renames strands the live mart under ``<name>.__old__``,
+    and the next read puts it back instead of finding the table gone."""
+    store = ParquetStore(spark, str(tmp_path))
+    for i in range(4):
+        batch = spark.range(i * 10, (i + 1) * 10).withColumn("day", (F.col("id") % 2).cast("int"))
+        store.append(batch, "mart", partition_by=["day"])
+    before = sorted(tuple(r) for r in store.read("mart").collect())
+
+    real_replace = os.replace
+    calls = []
+
+    def crash_on_second_rename(src, dst):
+        calls.append((src, dst))
+        if len(calls) == 2:
+            raise OSError("crash between the renames")
+        real_replace(src, dst)
+
+    monkeypatch.setattr(storage.os, "replace", crash_on_second_rename)
+    with pytest.raises(OSError, match="crash between the renames"):
+        compact_small_files(spark, store.path("mart"), partition_by=["day"])
+    monkeypatch.setattr(storage.os, "replace", real_replace)
+
+    assert not os.path.isdir(store.path("mart"))
+    assert sorted(tuple(r) for r in store.read("mart").collect()) == before
+
+    # and the next compaction over the restored mart goes through
+    compact_small_files(spark, store.path("mart"), partition_by=["day"])
+    assert sorted(tuple(r) for r in store.read("mart").collect()) == before
+    assert sorted(os.listdir(tmp_path)) == ["mart"]
 
 
 def test_overwrite_partitions_touches_only_written_days(spark, tmp_path):

@@ -4,7 +4,7 @@ The seed dims, the xlsx snapshots and a not-yet-written store table are
 built on the driver. They must plan as ``LocalRelation`` (real size stats)
 rather than an RDD scan of unbounded estimated size, so the planner
 broadcasts them: the day's writes then carry no sort-merge join, and a warm
-day runs at most 22 Spark jobs instead of 45. Checked on a generated K=1
+day runs at most 16 Spark jobs instead of 45. Checked on a generated K=1
 corpus against the DuckDB rules oracle and the SCD2 replay.
 """
 
@@ -59,25 +59,35 @@ def test_driver_side_inputs_plan_as_local_relations(spark, fraud_corpus, tmp_pat
 
 
 def test_run_day_writes_plan_no_sort_merge_join(fraud_run):
-    """Both days' SCD2 rewrite and mart append broadcast every dim: no
-    sort-merge join and no RDD scan anywhere in their physical plans. (On
-    the first day the SCD2 rewrite of an empty history folds into one
-    local table scan.)"""
-    for i, day in enumerate(fraud_run):
+    """Both days' writes scan no RDD and sort-merge nothing: the mart append
+    broadcasts every dim, and the SCD2 rewrite joins nothing at all (one
+    keyed window pass over history and snapshot)."""
+    for day in fraud_run:
         for name in (HIST, REPORT):
             plan = _physical(day["written"][name])
             assert "SortMergeJoin" not in plan, (day["day"], name, plan)
             assert "Scan ExistingRDD" not in plan, (day["day"], name, plan)
-            if i or name == REPORT:
-                assert "BroadcastHashJoin" in plan, (day["day"], name, plan)
+        assert "BroadcastHashJoin" in _physical(day["written"][REPORT]), day["day"]
+        assert "Join" not in _physical(day["written"][HIST]), day["day"]
+
+
+def test_mart_append_is_one_lookup_chain(fraud_run):
+    """The day's four rules share one card -> account -> client chain: the
+    append plan has exactly one broadcast join per lookup hop, not one per
+    rule."""
+    for day in fraud_run:
+        plan = _physical(day["written"][REPORT])
+        for hop in ("card_num", "account_num", "client"):
+            assert plan.count(f"BroadcastHashJoin [{hop}#") == 1, (day["day"], hop, plan)
 
 
 def test_warm_day_job_count(fraud_run):
-    """A warm day (SCD2 swap, mart append and read-back) runs at most 22
+    """A warm day (SCD2 swap, mart append and read-back) runs at most 16
     Spark jobs; with RDD-scanned dims it ran 45, with the Q1 distinct, the
-    Q3 groupBy and one write file per scan partition 25."""
+    Q3 groupBy and one write file per scan partition 25, with a join-based
+    SCD2 classify and four lookup chains in the append 21."""
     warm = fraud_run[1]
-    assert 0 < warm["jobs"] <= 22, warm["jobs"]
+    assert 0 < warm["jobs"] <= 16, warm["jobs"]
 
 
 def test_swap_jobs_count_in_callers_job_group(fraud_run):

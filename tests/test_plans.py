@@ -84,15 +84,17 @@ def test_run_day_read_back_prunes_to_the_day(fraud_run):
 
 
 @pytest.fixture(scope="module")
-def day_inputs(spark, fraud_corpus):
+def day_inputs(spark, fraud_corpus, tmp_path_factory):
     """The first corpus day's rule inputs, built as run_day builds them; the
-    terminal history is that day's SCD2 load of an empty history."""
+    terminal history is that day's SCD2 load of an empty history, written to
+    a store and read back as run_day reads it."""
     import datetime as dt
     import os
 
     from tests.conftest import perfbench_module
 
     from etl_process_for_detecting_fraudulent_transactions_spark.operators.scd2 import scd2_apply_snapshot
+    from etl_process_for_detecting_fraudulent_transactions_spark.plans.pipeline import HIST
     from etl_process_for_detecting_fraudulent_transactions_spark.plans.ingest import (
         typed_blacklist,
         typed_transactions,
@@ -109,20 +111,39 @@ def day_inputs(spark, fraud_corpus):
     from etl_process_for_detecting_fraudulent_transactions_spark.sources.local import local_frame
     from etl_process_for_detecting_fraudulent_transactions_spark.sources.seed_source import read_seed_dims
     from etl_process_for_detecting_fraudulent_transactions_spark.sources.xlsx_source import read_xlsx_df
+    from etl_process_for_detecting_fraudulent_transactions_spark.storage import ParquetStore
 
     day = fraud_corpus.dates[0]
     tag = perfbench_module("corpus").ddmmyyyy(day)
     xlsx = lambda name, schema: read_xlsx_df(  # noqa: E731
         spark, os.path.join(fraud_corpus.data_dir, f"{name}_{tag}.xlsx"), schema)
     dims = read_seed_dims(spark, fraud_corpus.seed_path)
+    snapshot = xlsx("terminals", TERMINALS_SNAPSHOT)
+    store = ParquetStore(spark, str(tmp_path_factory.mktemp("day_inputs")))
+    store.overwrite_swap(scd2_apply_snapshot(local_frame(spark, [], DIM_TERMINALS_HIST), snapshot,
+                                             run_ts=dt.datetime.combine(day, dt.time(23, 0))), HIST)
     return {
         "day": day,
         "transactions": typed_transactions(split_corrupt(read_transactions_csv(spark, fraud_corpus.tx_path(day)))[0]),
         "blacklist": typed_blacklist(xlsx("passport_blacklist", BLACKLIST_RAW)),
-        "hist": scd2_apply_snapshot(local_frame(spark, [], DIM_TERMINALS_HIST), xlsx("terminals", TERMINALS_SNAPSHOT),
-                                    run_ts=dt.datetime.combine(day, dt.time(23, 0))),
+        "snapshot": snapshot,
+        "hist": store.read(HIST, DIM_TERMINALS_HIST),
         "dims": (dims["cards"], dims["accounts"], dims["clients"]),
     }
+
+
+def test_scd2_on_a_history_is_one_key_exchange(day_inputs):
+    """A load over a stored history is one keyed pass: a single hash
+    exchange of history and snapshot on the key, and no join."""
+    import datetime as dt
+
+    from etl_process_for_detecting_fraudulent_transactions_spark.operators.scd2 import scd2_apply_snapshot
+
+    run_ts = dt.datetime.combine(day_inputs["day"], dt.time(23, 0)) + dt.timedelta(days=1)
+    plan = _plan(scd2_apply_snapshot(day_inputs["hist"], day_inputs["snapshot"], run_ts=run_ts))
+    assert plan.count("Exchange hashpartitioning(terminal_id") == 1, plan
+    assert plan.count("Exchange") == 1, plan
+    assert "Join" not in plan, plan
 
 
 def test_city_fraud_is_one_card_exchange(day_inputs):
@@ -270,11 +291,10 @@ def test_pit_probe_plan_is_one_broadcast_join(spark, sf_dir):
     assert plan.count("Exchange") <= 2
 
 
-def test_scd2_classify_broadcasts_under_aqe(spark, sf_dir):
-    """The SCD2 classifier decomposes into left + anti joins precisely so
-    AQE can convert them to broadcast at dim scale (full outer never
-    converts). After execution the adaptive plan must carry no full-outer
-    join and more broadcast than sort-merge joins."""
+def test_scd2_gate_is_one_key_exchange_without_joins(spark, sf_dir):
+    """The SCD2 gate classifies in one keyed window pass rather than joins:
+    after execution the adaptive plan carries no join of any kind (so no
+    full outer) and exactly one hash exchange, on the key."""
     from etl_process_for_detecting_fraudulent_transactions_spark.queries.relational import (
         scd2_snapshot_diff,
     )
@@ -282,8 +302,11 @@ def test_scd2_classify_broadcasts_under_aqe(spark, sf_dir):
     df = scd2_snapshot_diff(spark, sf_dir)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "FullOuter" not in plan
-    assert plan.count("BroadcastHashJoin") > plan.count("SortMergeJoin")
+    assert "FullOuter" not in plan, plan
+    assert "Join" not in plan, plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("Exchange hashpartitioning(key") == 1, plan
+    assert final.count("Exchange hashpartitioning") == 1, plan
 
 
 def test_runtime_bloom_filter_prunes_fact_side(spark, tmp_path):

@@ -5,9 +5,13 @@ compared with the DuckDB oracle (``perfbench/oracle.py::rep_fraud_rows``).
 Q3 is compared with a pure-Python reading of SURVEY §2.9 over random cards,
 cities and terminal histories, in all four ``(compat_time_filter,
 compat_hist_join)`` combinations; the oracle covers only the compat pair.
+``run_day``, which runs all four rules through one lookup chain, must return
+exactly the union of the four public rule functions, on the generated corpus
+and on a day built from the same dim edge cases.
 """
 
 import datetime as dt
+import os
 from collections import Counter
 
 import pytest
@@ -15,16 +19,18 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
-from tests.conftest import perfbench_module
+from tests.conftest import day_run_ts, perfbench_module
 
 from etl_process_for_detecting_fraudulent_transactions_spark.operators.scd2 import HIGH_TS
 from etl_process_for_detecting_fraudulent_transactions_spark.plans.ingest import (
     typed_blacklist,
     typed_transactions,
 )
+from etl_process_for_detecting_fraudulent_transactions_spark.plans.pipeline import HIST, PipelineState, run_day
 from etl_process_for_detecting_fraudulent_transactions_spark.plans.rules import (
     account_fraud,
     city_fraud,
+    guessing_amount_fraud,
     passport_fraud,
 )
 from etl_process_for_detecting_fraudulent_transactions_spark.schemas import (
@@ -39,6 +45,9 @@ from etl_process_for_detecting_fraudulent_transactions_spark.sources.csv_source 
     split_corrupt,
 )
 from etl_process_for_detecting_fraudulent_transactions_spark.sources.local import local_frame
+from etl_process_for_detecting_fraudulent_transactions_spark.sources.seed_source import read_seed_dims
+from etl_process_for_detecting_fraudulent_transactions_spark.sources.xlsx_source import read_xlsx_df
+from etl_process_for_detecting_fraudulent_transactions_spark.storage import ParquetStore
 
 RUN_DATE = dt.date(2021, 3, 2)
 D0 = dt.date(2021, 1, 1)
@@ -215,3 +224,89 @@ def test_city_fraud_matches_python_q3_in_every_mode(spark, q3_dims, inputs):
             ).collect())
             want = _q3(tx_rows, hist_rows, identity, compat_time_filter, compat_hist_join)
             assert got == want, (compat_time_filter, compat_hist_join)
+
+
+# --- run_day == the four rules -------------------------------------------------
+
+MODES = [(t, h) for t in (True, False) for h in (True, False)]
+
+
+@pytest.fixture(scope="module")
+def edge_day(tmp_path_factory):
+    """One day's input files over the Q1/Q2 edge-case dims plus a duplicate
+    card row: each card pays at T1 (city A) then T2 (city B), so Q3 flags
+    every card, and A7's card also carries a Q4 guessing chain."""
+    corpus = perfbench_module("corpus")
+    root = str(tmp_path_factory.mktemp("edge_day"))
+    cards = CARDS + [CARDS[2]]  # a duplicate card row (A3, expired and blacklisted passport)
+    block = corpus.Block(clients=CLIENTS, accounts=ACCOUNTS, cards=cards, card_city={}, terminals={},
+                         by_city={}, mutable=[])
+    seed_path = os.path.join(root, "ddl_dml.sql")
+    with open(seed_path, "w") as f:
+        f.write(corpus._sql_dump(corpus.Corpus(root=root, k=1, seed=0, blocks=[block])))
+    tag = corpus.ddmmyyyy(RUN_DATE)
+    lines = ["transaction_id;transaction_date;amount;card_num;oper_type;oper_result;terminal"]
+    t0 = dt.datetime.combine(RUN_DATE, dt.time(9, 0))
+    for n, card in enumerate(CARDS):
+        for i, terminal in enumerate(("T1", "T2")):
+            ts = t0 + dt.timedelta(minutes=30 * n + 7 * i)
+            lines.append(f"{2 * n + i};{ts:%Y-%m-%d %H:%M:%S};{100 + n},50;{card[0]};PAYMENT;SUCCESS;{terminal}")
+    chain = [("REJECT", 300), ("REJECT", 200), ("REJECT", 100), ("SUCCESS", 50)]
+    for i, (result, amount) in enumerate(chain):
+        ts = dt.datetime.combine(RUN_DATE, dt.time(20, 0)) + dt.timedelta(minutes=3 * i)
+        lines.append(f"{900 + i};{ts:%Y-%m-%d %H:%M:%S};{amount},00;{CARDS[6][0]};WITHDRAW;{result};T1")
+    with open(os.path.join(root, f"transactions_{tag}.txt"), "w") as f:
+        f.write("\n".join(lines) + "\n")
+    corpus.write_xlsx(os.path.join(root, f"terminals_{tag}.xlsx"),
+                      ["terminal_id", "terminal_type", "terminal_city", "terminal_address"],
+                      [["T1", "POS", "A", "a1"], ["T2", "POS", "B", "b1"]])
+    corpus.write_xlsx(os.path.join(root, f"passport_blacklist_{tag}.xlsx"), ["date", "passport"],
+                      [list(r) for r in BLACKLIST])
+    return seed_path, root, [RUN_DATE]
+
+
+def _four_rules(spark, seed_path, data_dir, day, hist, compat_time_filter, compat_hist_join):
+    """The day's rows from the four public rule functions, on the inputs
+    ``run_day`` reads and the history it left behind."""
+    tag = perfbench_module("corpus").ddmmyyyy(day)
+    dims = read_seed_dims(spark, seed_path)
+    cards, accounts, clients = dims["cards"], dims["accounts"], dims["clients"]
+    tx = typed_transactions(split_corrupt(read_transactions_csv(
+        spark, os.path.join(data_dir, f"transactions_{tag}.txt")))[0])
+    blacklist = typed_blacklist(read_xlsx_df(
+        spark, os.path.join(data_dir, f"passport_blacklist_{tag}.xlsx"), BLACKLIST_RAW))
+    frames = (
+        passport_fraud(tx, cards, accounts, clients, blacklist, day),
+        account_fraud(tx, cards, accounts, clients, day),
+        city_fraud(tx, hist, cards, accounts, clients,
+                   compat_time_filter=compat_time_filter, compat_hist_join=compat_hist_join),
+        guessing_amount_fraud(tx, cards, accounts, clients),
+    )
+    return Counter(tuple(r) for df in frames for r in df.collect())
+
+
+@pytest.mark.parametrize("compat_time_filter,compat_hist_join", MODES)
+@pytest.mark.parametrize("inputs", ["corpus", "edge_day"])
+def test_run_day_equals_the_four_rules(spark, request, tmp_path, inputs, compat_time_filter, compat_hist_join):
+    if inputs == "corpus":
+        c = request.getfixturevalue("fraud_corpus")
+        seed_path, data_dir, days = c.seed_path, c.data_dir, c.dates
+    else:
+        seed_path, data_dir, days = request.getfixturevalue("edge_day")
+    state = PipelineState(store=ParquetStore(spark, str(tmp_path / "store")), seed_dump_path=seed_path,
+                          compat_time_filter=compat_time_filter, compat_hist_join=compat_hist_join,
+                          archive=False)
+    corpus = perfbench_module("corpus")
+    for day in days:
+        got = Counter(
+            (r.event_dt, r.passport, r.fio, r.phone, r.event_type)
+            for r in run_day(spark, state, data_dir, run_date=corpus.ddmmyyyy(day), run_ts=day_run_ts(day)).collect()
+        )
+        want = _four_rules(spark, seed_path, data_dir, day, state.store.read(HIST, DIM_TERMINALS_HIST),
+                           compat_time_filter, compat_hist_join)
+        assert got == want, (day, got - want, want - got)
+        # the comparison is not vacuous: Q1-Q3 fire on every input, Q4 on the edge day
+        want_types = {"passport_fraud", "account_fraud", "city_fraud"}
+        if inputs == "edge_day":
+            want_types.add("guessing_amount_fraud")
+        assert {r[4] for r in got} >= want_types

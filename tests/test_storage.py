@@ -3,7 +3,8 @@
 ``overwrite_swap`` renames the live directory aside, moves the new one into
 place and only then deletes the old one. A crash between the two renames
 strands the previous version under ``<name>.__old__``; the next ``read``
-must put it back rather than report an empty table.
+must put it back rather than report an empty table. The swap writes the
+frame as planned, adding no exchange of its own.
 """
 
 import os
@@ -62,3 +63,23 @@ def test_swap_after_a_crash_replaces_the_stranded_table(spark, tmp_path):
     store.overwrite_swap(spark.createDataFrame([("T2", "B")], SCHEMA), "hist")
     assert _rows(store.read("hist")) == [("T2", "B")]
     assert sorted(os.listdir(tmp_path)) == ["hist"]
+
+
+def test_swap_write_adds_no_exchange(spark, tmp_path, monkeypatch):
+    """``overwrite_swap`` writes the frame's own plan: no rebalance or
+    round-robin exchange is added on top of it."""
+    src = str(tmp_path / "src")
+    spark.createDataFrame([("T%d" % i, "A") for i in range(20)], SCHEMA).repartition(4).write.parquet(src)
+    store = ParquetStore(spark, str(tmp_path / "store"))
+
+    writers = []
+    frame_type = type(spark.range(1))
+    real_write = frame_type.write
+    monkeypatch.setattr(frame_type, "write", property(lambda df: writers.append(df) or real_write.fget(df)))
+    store.overwrite_swap(spark.read.parquet(src), "hist")
+    monkeypatch.setattr(frame_type, "write", real_write)
+
+    assert len(writers) == 1
+    plan = writers[0]._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert "REBALANCE" not in plan.upper() and "RoundRobinPartitioning" not in plan, plan
