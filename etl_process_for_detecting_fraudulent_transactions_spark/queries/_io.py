@@ -9,8 +9,6 @@ matching DuckDB's own nanos→micros truncation.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -140,8 +138,6 @@ def fan_out(df: DataFrame, tier: str = "wide") -> DataFrame:
     the exchange + probe overhead outweighs sub-second compute (measured
     regressions on pca_power_iteration and the bmp/audio kernels).
     """
-    if os.environ.get("SPARK_GRAFT_NO_FANOUT"):
-        return df  # measurement hook: same-session A/B of the fan-out itself
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
     target = cores if tier == "wide" else max(4, cores // 4)
@@ -172,8 +168,6 @@ def fan_out_by(df: DataFrame, *cols: str) -> DataFrame:
     Width = max(defaultParallelism, spark.sql.shuffle.partitions): cores
     locally, the configured shuffle width on a real cluster.
     """
-    if os.environ.get("SPARK_GRAFT_NO_FANOUT"):
-        return df  # measurement hook: same-session A/B of the fan-out itself
     spark = df.sparkSession
     try:
         conf_n = int(spark.conf.get("spark.sql.shuffle.partitions"))

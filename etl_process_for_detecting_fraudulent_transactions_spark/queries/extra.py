@@ -1157,9 +1157,6 @@ QUERIES["attribution_linear"] = attribution_linear
 ORACLES["attribution_linear"] = ORACLE_ATTRIB_LINEAR
 
 
-# ==== round-7 additions (appended BELOW the rotation window) =====================
-
-
 # -- day-over-day audience overlap (Jaccard) ---------------------------------------
 # The churn-vs-stickiness companion to retention_cohorts (weekly, anchored
 # at first activity): for each consecutive day pair (d, d+1), the Jaccard

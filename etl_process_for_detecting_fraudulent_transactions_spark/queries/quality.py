@@ -278,9 +278,6 @@ QUERIES["column_profile"] = column_profile
 ORACLES["column_profile"] = ORACLE_PROFILE
 
 
-# ==== round-6 additions (appended BELOW the rotation window) =====================
-
-
 # -- k-anonymity audit -----------------------------------------------------------
 # The privacy gate a training-data release pipeline runs before shipping a
 # corpus: group rows into equivalence classes by their quasi-identifier
@@ -379,9 +376,6 @@ FROM classes
 
 QUERIES["l_diversity_events"] = l_diversity_events
 ORACLES["l_diversity_events"] = ORACLE_L_DIV
-
-
-# ==== round-7 additions (appended BELOW the rotation window) =====================
 
 
 # -- t-closeness audit -------------------------------------------------------------

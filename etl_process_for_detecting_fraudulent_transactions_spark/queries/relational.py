@@ -842,9 +842,6 @@ QUERIES["scd3_update"] = scd3_update
 ORACLES["scd3_update"] = ORACLE_SCD3
 
 
-# ==== round-7 additions (appended BELOW the rotation window) =====================
-
-
 # -- segmented sessionization (the degenerate-key scale path) ----------------------
 # sessionize's one structural bound, measured by tools/skew_scale_bench.py:
 # its per-user window puts ALL of a user's rows in one task, so a

@@ -16,7 +16,6 @@ error, and ties break on vec_id, so row_number ranks are engine-stable.
 from __future__ import annotations
 
 import hashlib
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -87,23 +86,13 @@ def _make_cosine_pandas():
 _cosine_pandas_udf = None
 
 
-def _cosine_vec(a, b):
-    """Vectorized cosine (A/B winner for rank-output gates — 2024-style
-    Arrow pandas_udf; see ROUNDLOG r3 for the measured deltas)."""
+def _cosine(a, b):
+    """Cosine kernel of the rank-output knn family: the Arrow pandas_udf
+    above (the threshold gates call ``_cosine_hof`` instead)."""
     global _cosine_pandas_udf
     if _cosine_pandas_udf is None:
         _cosine_pandas_udf = _make_cosine_pandas()
     return _cosine_pandas_udf(a, b)
-
-
-# Kernel switch for the rank-output knn family. "pandas" (default) =
-# Arrow-vectorized; "hof" = Catalyst sequential (the oracle-exact kernel,
-# also used unconditionally by the threshold gates). Env override for A/B:
-# SPARK_GRAFT_COSINE=hof python bench.py
-def _cosine(a, b):
-    if os.environ.get("SPARK_GRAFT_COSINE", "pandas") == "hof":
-        return _cosine_hof(a, b)
-    return _cosine_vec(a, b)
 
 
 def knn_brute_force(spark, sf_dir):
@@ -197,17 +186,6 @@ def _bucket_col(vec):
     return _signs_bucket_col(vec, _SIGNS)
 
 
-def _all_buckets_hof(vec):
-    """array<string> of the N_TABLES table-qualified bucket strings, via the
-    Catalyst HOF projections (sequential sums, the oracle-exact kernel)."""
-    return F.array(
-        *[
-            F.concat(F.lit(f"{t}|"), _signs_bucket_col(vec, _TABLE_SIGNS[t]))
-            for t in range(N_TABLES)
-        ]
-    )
-
-
 _buckets_pandas_udf = None
 
 
@@ -251,12 +229,8 @@ def _make_buckets_pandas():
     return pandas_udf(_buckets, "array<string>")
 
 
-# Kernel switch for the knn-family bucket computation, mirroring _cosine:
-# "pandas" (default) = one Arrow matmul for all tables; "hof" = per-plane
-# Catalyst aggregates. Env override for A/B: SPARK_GRAFT_BUCKETS=hof
 def _all_buckets_col(vec):
-    if os.environ.get("SPARK_GRAFT_BUCKETS", "pandas") == "hof":
-        return _all_buckets_hof(vec)
+    """array<string> of the N_TABLES table-qualified bucket strings."""
     global _buckets_pandas_udf
     if _buckets_pandas_udf is None:
         _buckets_pandas_udf = _make_buckets_pandas()

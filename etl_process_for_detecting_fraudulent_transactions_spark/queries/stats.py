@@ -2934,9 +2934,6 @@ QUERIES["kaplan_meier_survival"] = kaplan_meier_survival
 ORACLES["kaplan_meier_survival"] = ORACLE_KM
 
 
-# ==== round-6 additions (appended BELOW the rotation window) =====================
-
-
 # -- Theil-Sen robust slope ---------------------------------------------------------
 # The robust-regression companion to ols_two_features: the median of all
 # pairwise slopes of the per-type daily series — immune to the outliers
@@ -3538,10 +3535,6 @@ FROM best WHERE rk = 1
 
 QUERIES["pettitt_changepoint"] = pettitt_changepoint
 ORACLES["pettitt_changepoint"] = ORACLE_PETTITT
-
-
-# ==== round-7 additions (appended BELOW the rotation window; growth =============
-# ==== throttled to <=5 gates this round per VERDICT r6 #2) ======================
 
 
 # -- 1-Wasserstein (earth-mover) distance, distributed prefix-sum -----------------

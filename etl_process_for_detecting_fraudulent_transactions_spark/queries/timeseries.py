@@ -1211,9 +1211,6 @@ QUERIES["session_window_builtin"] = session_window_builtin
 ORACLES["session_window_builtin"] = ORACLE_SESSION_WINDOW
 
 
-# ==== round-6 additions (appended BELOW the rotation window) =====================
-
-
 # -- Holt linear (double-exponential) smoothing ---------------------------------
 # Forecasting companion to ewma_anomaly: level + trend recurrence
 #   l_i = (x_i + 3*(l_{i-1} + b_{i-1})) tdiv 4        (alpha = 1/4)
@@ -1488,8 +1485,6 @@ QUERIES["autocorr_lag"] = autocorr_lag
 ORACLES["autocorr_lag"] = ORACLE_AUTOCORR
 
 
-# ==== round-8 additions (appended BELOW the rotation window) =====================
-#
 # Segmented, skew-IMMUNE siblings for the two per-user window gates the
 # round-7 planted-skew tier measured hitting a degenerate-key wall
 # (tools/skew_scale_bench.py: session_window_builtin 9.4x, asof_join_nearest

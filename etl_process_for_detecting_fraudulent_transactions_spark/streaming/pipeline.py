@@ -261,42 +261,25 @@ def stream_events_to_mart(
     mart_name: str = "rep_fraud",
 ):
     """Complete the streaming path into the report mart: per micro-batch,
-    enrich matcher events with the card→account→client identity chain
-    (broadcast dims — the same lookup the batch rules use) and append to the
-    hive-partitioned REP_FRAUD store via ``foreachBatch``.
+    enrich matcher events with the card→account→client identity chain (the
+    batch rules' own ``fraud_rows``) and append to the hive-partitioned
+    REP_FRAUD store via ``foreachBatch``. The matchers emit typed events
+    only, so each event yields exactly one report row of its type.
 
     foreachBatch is the right sink here because the mart write is an
     idempotent-per-batch append of a small enriched frame — full sink
     semantics (exactly-once via checkpoint + batchId) without a custom sink.
     Returns the StreamingQuery.
     """
-    from ..functions.casts import fio_concat
+    import datetime as dt
+
     from ..plans.report import stamp
+    from ..plans.rules import flagged_accounts, flagged_clients, fraud_rows
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        enriched = (
-            batch_df.join(cards.select("card_num", "account_num"), "card_num", "left")
-            .join(accounts.select("account_num", "client"), "account_num", "left")
-            .join(
-                clients.select(
-                    "client_id", "passport_num", "last_name", "first_name",
-                    "patrinymic", "phone",
-                ),
-                F.col("client") == F.col("client_id"),
-                "left",
-            )
-            .select(
-                "event_dt",
-                F.col("passport_num").alias("passport"),
-                fio_concat("last_name", "first_name", "patrinymic").alias("fio"),
-                "phone",
-                "event_type",
-            )
-        )
-        import datetime as dt
-
+        enriched = fraud_rows(batch_df, cards, flagged_accounts(accounts), flagged_clients(clients))
         run_ts = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None, microsecond=0)
         store.append(stamp(enriched, run_ts), mart_name, partition_by=["report_date"])
 

@@ -6,8 +6,8 @@ a duplicate (the r5 ``winsorized_stats`` case) is invisible at runtime — a
 later edit to one copy would silently shadow the other. These tests parse
 the module source via ``ast`` and assert every key is registered exactly
 once across the whole package, plus the structural invariants the driver
-contract relies on (oracle keys subset of query keys, the ordering helpers
-drop nothing, priority keys all resolve).
+contract relies on (oracle keys subset of query keys, the registry merge
+drops nothing, keys come back in sorted order).
 """
 
 from __future__ import annotations
@@ -86,17 +86,19 @@ def test_source_registrations_match_runtime_registry():
     src_q = {k for k, n in _registrations("QUERIES").items() if n > 0}
     rt_q = set(all_queries())
     assert src_q == rt_q, (
-        "ordering helper dropped or invented keys: "
+        "registry merge dropped or invented keys: "
         f"src-only={sorted(src_q - rt_q)} runtime-only={sorted(rt_q - src_q)}"
     )
     assert set(all_oracles()) <= rt_q
 
 
-def test_priority_keys_all_resolve_and_are_unique():
-    from etl_process_for_detecting_fraudulent_transactions_spark import queries
+def test_registry_is_sorted():
+    from etl_process_for_detecting_fraudulent_transactions_spark.queries import (
+        all_oracles,
+        all_queries,
+    )
 
-    pk = queries._PRIORITY_KEYS
-    assert len(pk) == len(set(pk)), "duplicate key in _PRIORITY_KEYS"
-    registered = set(queries.all_queries())
-    missing = [k for k in pk if k not in registered]
-    assert not missing, f"_PRIORITY_KEYS names unregistered keys: {missing}"
+    qs, oracles = all_queries(), all_oracles()
+    assert list(qs) == sorted(qs)
+    assert list(oracles) == sorted(oracles)
+    assert len(qs) == len(oracles) == 231

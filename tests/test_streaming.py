@@ -1,6 +1,8 @@
-"""Streaming variant tests: pure matcher unit tests + a golden replay of the
+"""Streaming variant tests: pure matcher unit tests, a golden replay of the
 stateful Q4 matcher over the reference's day-1 transactions file
-(availableNow trigger → memory sink)."""
+(availableNow trigger → memory sink), and stream-vs-batch equivalence on
+the generated corpus. Only the tests marked ``needs_refdata`` read the
+reference's files."""
 
 import os
 import shutil
@@ -9,7 +11,7 @@ import pytest
 
 from tests.conftest import REFDATA
 
-pytestmark = pytest.mark.skipif(
+needs_refdata = pytest.mark.skipif(
     not os.path.isdir(REFDATA), reason="reference data not available"
 )
 
@@ -101,6 +103,7 @@ def test_match_step_rolling_window():
     assert _run(seq) == [4]
 
 
+@needs_refdata
 def test_guessing_amount_stream_golden(spark, tmp_path):
     """Day-1 file through the stateful streaming matcher reproduces the
     batch golden event (card of passport 5771 567535 @ 22:36:38)."""
@@ -136,6 +139,7 @@ def test_guessing_amount_stream_golden(spark, tmp_path):
     assert rows[0].event_type == "guessing_amount_fraud"
 
 
+@needs_refdata
 def test_three_day_stream_continuous_state(spark, tmp_path):
     """3 daily files in one stream (maxFilesPerTrigger=1 → 3 micro-batches):
     reproduces the day-1 golden event AND finds one cross-midnight chain
@@ -174,6 +178,7 @@ def test_three_day_stream_continuous_state(spark, tmp_path):
     assert got == ["2021-03-01 22:36:38", "2021-03-03 00:13:21"]
 
 
+@needs_refdata
 def test_stream_to_mart_identity(spark, tmp_path):
     """Full streaming path: file stream → stateful matcher → foreachBatch
     identity enrichment → partitioned mart. The day-1 golden event lands in
@@ -213,6 +218,56 @@ def test_stream_to_mart_identity(spark, tmp_path):
     assert rows[0].fio is not None and rows[0].report_date is not None
 
 
+
+def test_stream_to_mart_matches_batch_guessing(spark, fraud_corpus, tmp_path):
+    """Per generated day, the streaming Q4 path (file stream → stateful
+    matcher → ``stream_events_to_mart``) lands exactly the rows of batch
+    ``guessing_amount_fraud`` over the same file, as a multiset."""
+    from collections import Counter
+
+    from etl_process_for_detecting_fraudulent_transactions_spark.plans.ingest import typed_transactions
+    from etl_process_for_detecting_fraudulent_transactions_spark.plans.rules import guessing_amount_fraud
+    from etl_process_for_detecting_fraudulent_transactions_spark.schemas import REP_FRAUD
+    from etl_process_for_detecting_fraudulent_transactions_spark.sources.csv_source import (
+        read_transactions_csv,
+        split_corrupt,
+    )
+    from etl_process_for_detecting_fraudulent_transactions_spark.sources.seed_source import (
+        read_seed_dims,
+    )
+    from etl_process_for_detecting_fraudulent_transactions_spark.storage import ParquetStore
+    from etl_process_for_detecting_fraudulent_transactions_spark.streaming.pipeline import (
+        guessing_amount_stream,
+        stream_events_to_mart,
+        stream_transactions,
+    )
+
+    cols = ["event_dt", "passport", "fio", "phone", "event_type"]
+    dims = read_seed_dims(spark, fraud_corpus.seed_path)
+    cards, accounts, clients = dims["cards"], dims["accounts"], dims["clients"]
+    for i, day in enumerate(fraud_corpus.dates):
+        tx_path = fraud_corpus.tx_path(day)
+        tx = typed_transactions(split_corrupt(read_transactions_csv(spark, tx_path))[0])
+        want = Counter(tuple(r) for r in guessing_amount_fraud(tx, cards, accounts, clients)
+                       .select(cols).collect())
+        assert sum(want.values()) > 0, f"day {day}: no Q4 hit to compare"
+
+        landing = tmp_path / f"landing_{i}"
+        landing.mkdir()
+        shutil.copy(tx_path, landing / os.path.basename(tx_path))
+        store = ParquetStore(spark, str(tmp_path / f"mart_{i}"))
+        q = stream_events_to_mart(
+            guessing_amount_stream(stream_transactions(spark, str(landing))),
+            cards, accounts, clients, store, str(tmp_path / f"ckpt_{i}"),
+        )
+        _drain_until(
+            q, lambda: store.read("rep_fraud", REP_FRAUD).count(),
+            expected=sum(want.values()), timeout=300,
+        )
+        got = Counter(tuple(r) for r in store.read("rep_fraud", REP_FRAUD).select(cols).collect())
+        assert got == want, f"day {day}"
+
+@needs_refdata
 def test_city_fraud_stream_day1(spark, tmp_path):
     """Streaming city rule on day-1 data: the golden card (passport
     8115 161624) is flagged; its batch event_dt 02:54:34 appears among the
@@ -263,6 +318,7 @@ def test_city_fraud_stream_day1(spark, tmp_path):
     assert "2021-03-01 02:54:34" in stamps
 
 
+@needs_refdata
 def test_passport_fraud_stream_day2(spark, tmp_path):
     """Streaming Q1 on day-2 data reproduces the 480 golden rows (all for
     blacklisted client passport 3032 452883) via stream-static broadcast
@@ -333,6 +389,7 @@ def _protobuf_ok() -> bool:
 # RUNS the test: the operator's own fail-fast ImportError (pipeline.py,
 # guessing_amount_stream_tws) is the recorded failure, and if protobuf ever
 # appears the test executes for real (strict=False lets it pass then).
+@needs_refdata
 @pytest.mark.xfail(
     not _protobuf_ok(),
     reason=(
@@ -382,6 +439,7 @@ def test_guessing_amount_tws_day1(spark, tmp_path):
     assert rows[0].event_dt.strftime("%Y-%m-%d %H:%M:%S") == "2021-03-01 22:36:38"
 
 
+@needs_refdata
 def test_card_sessions_stream_matches_batch(spark, tmp_path):
     """Session windows (gap-merge) computed by the STREAMING path (state
     store, watermark-closed sessions) equal the BATCH path (same function on
@@ -439,6 +497,7 @@ def test_card_sessions_stream_matches_batch(spark, tmp_path):
     assert len(safe) > 1000  # the property is non-vacuous at this data size
 
 
+@needs_refdata
 def test_stream_stream_join_matches_batch(spark, tmp_path):
     """The stream-stream (REJECT, SUCCESS within 20 min) self join emits
     EXACTLY the batch join of the same frames — inner joins emit on match,
@@ -479,6 +538,7 @@ def test_stream_stream_join_matches_batch(spark, tmp_path):
     assert streamed == expected
 
 
+@needs_refdata
 def test_dedup_stream_drops_redelivered_file(spark, tmp_path):
     """The same daily file delivered TWICE (at-least-once upstream): the
     streaming dedup emits each trans_id exactly once — output matches the

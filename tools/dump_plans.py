@@ -3,8 +3,8 @@
 Usage: python tools/dump_plans.py <tag> <suffix> key [key ...]
 e.g.:  python tools/dump_plans.py r12 before doc_fingerprint record_linkage_fs
 
-Evidence for the optimization rounds: the judge checks plan-shape claims
-(Exchange counts, join strategies, PushedFilters) against these files.
+Evidence for plan-shape claims (Exchange counts, join strategies,
+PushedFilters). The dumps are regenerated on demand, not committed.
 """
 
 from __future__ import annotations
