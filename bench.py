@@ -282,8 +282,10 @@ def _time_query(spark, fn, sf_dir: str, iters: int = 2):
             if best is None:
                 err = f"{type(exc).__name__}: {exc}"[:300]
         finally:
-            # queries are independent: drop cached frames so one query's
-            # cache residue doesn't squeeze the next one's execution memory
+            # drop frames a query .cache()s itself so its residue doesn't
+            # squeeze the next one's execution memory; the queries/_io.py
+            # memos are checkpoints, which this leaves in place (at most
+            # one per tag)
             spark.catalog.clearCache()
     return best, n, err
 

@@ -13,94 +13,34 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-# -- session-scoped cache registry -------------------------------------------
-# Gate functions cache small reused frames (LSH-bucketed embeddings, DSIR
-# vocab counts). The frames are LAZY dependencies of the returned DataFrame,
-# so the function cannot unpersist before the driver's action — but without
-# any release, every call pins a fresh frame in executor storage for the
-# session lifetime (221-gate bench sessions accumulate dozens; round-9
-# advice). `session_cache` memoizes by (tag, sf_dir): a repeat call returns
-# the SAME cached frame (hybrid_search_rrf re-invoking knn_lsh no longer
-# double-caches the embeddings), and a call for a different sf_dir
-# unpersists the superseded entry — at most one live cached frame per tag.
+# -- session-scoped memo -----------------------------------------------------
+# Gate functions reuse small frames that are pure functions of one corpus
+# snapshot (shingle sets, LSH indexes, PQ codebooks, scored candidate
+# frames). `memo` keeps ONE copy of each: a localCheckpoint, whose blocks
+# live in the RDD block store and so survive `spark.catalog.clearCache()`.
+# The registry holds at most one entry per tag. A new (sf_dir, session)
+# for a tag replaces the entry and only drops the reference: Spark's
+# ContextCleaner frees the old blocks once no frame derives from them
+# (unpersisting the checkpoint RDD instead would break any frame still
+# derived from it with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).
+#
+# Tags are unique per builder (a hit never runs `build`, so it cannot tell
+# two builders apart; tests/test_memo.py checks each tag has one call
+# site). Keys do NOT notice files rewritten in place at the same path:
+# callers that regenerate data use a fresh directory.
 
-_CACHE_REGISTRY: dict[str, tuple[str, object, DataFrame, object]] = {}
-
-
-def _plan_hash(df: DataFrame):
-    """Semantic hash of the analyzed plan — a memo hit must be the SAME
-    computation, not just the same tag: two call sites sharing a tag by
-    convention (knn_lsh / knn_lsh_multiprobe) would otherwise silently
-    serve each other's frame if one's expression ever drifts (round-9
-    review finding). Analysis only, no execution."""
-    try:
-        return df._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:
-        return None
+_CACHE_REGISTRY: dict[str, tuple[str, SparkSession, DataFrame]] = {}
 
 
-def session_cache(df: DataFrame, tag: str, sf_dir: str) -> DataFrame:
-    """NOTE the contract: memoization keys on (tag, sf_dir, session, plan);
-    it does NOT detect files being REWRITTEN at the same path mid-session —
-    callers that regenerate data must use a fresh directory (all tests and
-    sweeps do: pytest tmp_path / tempfile corpora are single-write)."""
-    sess = df.sparkSession
-    new_hash = _plan_hash(df)
+def memo(spark: SparkSession, sf_dir: str, tag: str, build, eager: bool = False) -> DataFrame:
+    """The frame memoized under ``(tag, sf_dir, spark)``; on a miss,
+    ``build().localCheckpoint(eager=eager)`` is stored and returned."""
     prev = _CACHE_REGISTRY.get(tag)
-    if prev is not None:
-        prev_sf, prev_sess, prev_df, prev_hash = prev
-        if (
-            prev_sf == sf_dir
-            and prev_sess is sess
-            and prev_hash is not None
-            and prev_hash == new_hash
-        ):
-            # an external spark.catalog.clearCache() (bench/rehearsal do
-            # this between queries) unpersists the frame behind our back;
-            # returning it un-re-cached made every dedup gate re-derive the
-            # shingle subtree per consumer (bench tail panel caught it:
-            # dedup_ngram_jaccard 2.5u -> 12u). Re-mark it for caching —
-            # cheap no-op when still persisted.
-            if not prev_df.storageLevel.useMemory:
-                prev_df.cache()
-            return prev_df
-        try:
-            # non-blocking: in-flight jobs over the old frame recompute;
-            # best-effort — the previous session may already be stopped
-            prev_df.unpersist(blocking=False)
-        except Exception:
-            pass
-    df = df.cache()
-    _CACHE_REGISTRY[tag] = (sf_dir, sess, df, new_hash)
+    if prev is not None and prev[0] == sf_dir and prev[1] is spark:
+        return prev[2]
+    df = build().localCheckpoint(eager=eager)
+    _CACHE_REGISTRY[tag] = (sf_dir, spark, df)
     return df
-
-
-def session_cache_lazy(tag: str, sf_dir: str, builder, session: SparkSession) -> DataFrame:
-    """session_cache for frames that are EXPENSIVE to even construct (e.g.
-    an eager localCheckpoint): ``builder()`` runs only on a memo miss, so a
-    repeat call skips the materialization entirely instead of building a
-    fresh checkpoint and discarding it (round-9 review finding on
-    dedup_clusters).
-
-    Contract (round-9 ADVICE): unlike ``session_cache``, a memo hit cannot
-    compare the builder's plan hash (the builder hasn't run), so TAGS MUST BE
-    UNIQUE PER BUILDER — two call sites sharing a lazy tag would serve each
-    other's frame. Session identity IS checked against the CALLER's
-    ``session`` (round-10 review: ``getActiveSession()`` is thread-local and
-    names whichever session is active, not the one the caller computes with
-    — a ``newSession()`` caller would be served the other session's frame,
-    and a worker thread with no active session would never memo-hit and
-    rebuild the expensive checkpoint every call)."""
-    prev = _CACHE_REGISTRY.get(tag)
-    if prev is not None and prev[0] == sf_dir and prev[1] is session:
-        prev_df = prev[2]
-        try:
-            if not prev_df.storageLevel.useMemory:
-                prev_df.cache()
-            return prev_df
-        except Exception:
-            pass  # dead session behind the memo — rebuild below
-    return session_cache(builder(), tag, sf_dir)
 
 
 def fan_out(df: DataFrame, tier: str = "wide") -> DataFrame:

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._io import fan_out, session_cache, session_cache_lazy
+from ._io import fan_out, memo
 
 N_MINHASH = 12         # minhash permutations
 N_BANDS = 6            # LSH bands (rows per band = 2): the (b, r) tuning
@@ -135,21 +135,20 @@ def _doc_shingle_arrays(docs: DataFrame) -> DataFrame:
 def _shingle_arrays(spark, sf_dir):
     # reused by the signature build + both verify sides across ~11 gates —
     # the per-doc shingle SET is a pure function of the corpus snapshot, so
-    # it is localCheckpointed and memoized per (session, sf_dir): computed
-    # once per corpus, not once per gate (the PQ-trainer / doc_fingerprint
-    # train-once precedent; checkpoint blocks survive the bench's
-    # clearCache where a plain .cache() is dropped and re-derived by every
-    # consumer). The frame is narrow (N rows, not N×shingles).
-    return session_cache_lazy(
-        "dedup_shingles",
+    # it is memoized per (session, sf_dir): computed once per corpus, not
+    # once per gate (the PQ-trainer / doc_fingerprint train-once
+    # precedent). The frame is narrow (N rows, not N×shingles).
+    return memo(
+        spark,
         sf_dir,
+        "dedup_shingles",
         # fan_out: the shingle transform (split + n-gram concat + distinct
         # per row) is the family's dominant map cost and the local scan is
         # one split — spread it across cores before computing; the
         # checkpoint then also hands every consumer a wide frame (r12
         # optimization round, guide §2.5 input-skew fix)
-        lambda: _doc_shingle_arrays(fan_out(_docs(spark, sf_dir), tier="medium")).localCheckpoint(),
-        spark,
+        lambda: _doc_shingle_arrays(fan_out(_docs(spark, sf_dir), tier="medium")),
+        eager=True,
     )
 
 
@@ -324,21 +323,20 @@ def _band_candidates_memo(spark, sf_dir) -> DataFrame:
     """Checkpoint-memoized banded candidate pair set (r13, VERDICT r12 #5).
 
     The (doc_a < doc_b) band-collision pair set is a pure function of the
-    corpus snapshot, and FIVE consumers re-derived it per session — the
-    verified gate (dedup_minhash_lsh), the MLlib union (dedup_minhash_mllib),
-    minhash_containment, dedup_clusters' pair build, and BOTH audit legs of
-    dedup_recall_audit (raw-candidate leg + the verified leg via
-    dedup_minhash_lsh). One eager localCheckpoint of the tiny pair frame
-    (~O(dups) rows) replaces a band self-join per consumer. The audit's
-    TRUTH leg deliberately does NOT ride this memo: it recomputes exact
-    Jaccard from the shingle arrays, so the audit still recomputes what it
-    audits."""
-    return session_cache_lazy(
-        "dedup_band_cands",
-        sf_dir,
-        lambda: _minhash_band_candidates(_shingle_arrays(spark, sf_dir))
-        .localCheckpoint(eager=True),
+    corpus snapshot, and four consumers re-derived it per session — the
+    verified gate (dedup_minhash_lsh, also dedup_recall_audit's verified
+    leg), the MLlib union (dedup_minhash_mllib), minhash_containment and
+    dedup_clusters' pair build. One eager localCheckpoint of the tiny pair
+    frame (~O(dups) rows) replaces a band self-join per consumer. The
+    audit's raw-candidate and truth legs deliberately do NOT ride this
+    memo: they rebuild the candidates and the exact Jaccard from the
+    shingle arrays, so the audit recomputes what it audits."""
+    return memo(
         spark,
+        sf_dir,
+        "dedup_band_cands",
+        lambda: _minhash_band_candidates(_shingle_arrays(spark, sf_dir)),
+        eager=True,
     )
 
 
@@ -469,15 +467,16 @@ def dedup_simhash(spark, sf_dir):
     # first consumer pays the build once and the gate is band-join +
     # hamming verify only (r13 A/B: 3.36 s → 0.58-0.69 s memo-hit,
     # 2.96 s cold incl. build; output verified identical, 236 rows).
-    sig = session_cache_lazy(
-        "simhash_sig",
+    sig = memo(
+        spark,
         sf_dir,
+        "simhash_sig",
         lambda: votes.select(
             "doc_id",
             packed_hi.cast("bigint").alias("sig_hi"),
             packed_lo.cast("bigint").alias("sig_lo"),
-        ).localCheckpoint(eager=True),
-        spark,
+        ),
+        eager=True,
     )
     banded = sig.select(
         "doc_id",
@@ -597,34 +596,34 @@ def dedup_clusters(spark, sf_dir):
     equally); at 100 TB the label-propagation input is ~O(duplicates), and
     the clustering itself only ever touches docs that HAVE a near-dup."""
     arr = _shingle_arrays(spark, sf_dir)
-    # eager localCheckpoint (not cache): the CC loop's first count would
-    # otherwise trigger one giant job that scans the cold-cached shingle
-    # frame 3× concurrently (band join + both verify sides) —
-    # materializing the pair set first keeps the loop on a tiny in-memory
-    # table and truncates the LSH lineage out of every round's plan
-    # lazy memo (round-9 review): the eager checkpoint is the dominant cost,
-    # so a repeat call must not rebuild it just to discard it on the
-    # members/edges memo hit. catalog.clearCache() doesn't touch checkpoint
-    # blocks (they persist via the RDD, not the SQL CacheManager).
-    pairs = session_cache_lazy(
-        "dedup_cluster_pairs",
+    # eager checkpoint: the CC loop's first count would otherwise trigger
+    # one giant job that scans the shingle frame 3× concurrently (band
+    # join + both verify sides) — materializing the pair set first keeps
+    # the loop on a tiny in-memory table and truncates the LSH lineage out
+    # of every round's plan. A memo hit skips the build entirely.
+    pairs = memo(
+        spark,
         sf_dir,
+        "dedup_cluster_pairs",
         lambda: _verify_exact_jaccard(arr, _band_candidates_memo(spark, sf_dir))
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True),
-        arr.sparkSession,
+        .select("doc_a", "doc_b"),
+        eager=True,
     )
     # undirected edge list + self-loops over the member set
-    members = session_cache(
-        pairs.select(F.col("doc_a").alias("doc_id"))
+    members = memo(
+        spark,
+        sf_dir,
+        "dedup_cluster_members",
+        lambda: pairs.select(F.col("doc_a").alias("doc_id"))
         .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
         .distinct(),
-        "dedup_cluster_members", sf_dir,
     )
-    edges = session_cache(
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    edges = memo(
+        spark,
+        sf_dir,
+        "dedup_cluster_edges",
+        lambda: pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))),
-        "dedup_cluster_edges", sf_dir,
     )
     labels = members.withColumn("label", F.col("doc_id"))
     for _ in range(20):  # diameter bound; tiny planted clusters converge fast
@@ -1628,15 +1627,16 @@ def dedup_recall_audit(spark, sf_dir):
     panel = (F.col("doc_a") % AUDIT_DOC_MOD == 0) & (
         F.col("doc_b") % AUDIT_DOC_MOD == 0
     )
-    truth = session_cache(
-        dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b").filter(panel),
-        "dedup_truth_pairs",
+    truth = memo(
+        spark,
         sf_dir,
+        "dedup_truth_pairs",
+        lambda: dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b").filter(panel),
     )
     tc = truth.agg(F.count(F.lit(1)).alias("truth_pairs"))
     out = None
     for method, pairs in (
-        ("minhash_cand", _band_candidates_memo(spark, sf_dir)),
+        ("minhash_cand", _minhash_band_candidates(arr)),
         ("minhash_verified", dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")),
         ("simhash", dedup_simhash(spark, sf_dir).select("doc_a", "doc_b")),
     ):

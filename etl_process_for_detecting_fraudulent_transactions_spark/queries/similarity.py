@@ -20,7 +20,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ._io import fan_out, session_cache, session_cache_lazy
+from ._io import fan_out, memo
 
 TOP_K = 5
 QUERY_MOD = 50          # queries = vec_id % QUERY_MOD == 0
@@ -254,8 +254,8 @@ def _sql_bucket(vec_expr: str) -> str:
 def _emb_all_buckets(spark, sf_dir):
     """(vec_id, embedding, bs[4]) — the sign-LSH INDEX: all four tables'
     bucket keys per vector. A pure function of the corpus snapshot
-    (deterministic hyperplanes), so it is localCheckpointed and memoized
-    per (session, sf_dir) like the PQ codebook and the dedup shingle
+    (deterministic hyperplanes), so it is checkpoint-memoized per
+    (session, sf_dir) via ``_io.memo`` like the PQ codebook and the shingle
     frame: the index is built once and probed by knn_lsh, the multiprobe
     variant, the hybrid gate's semantic leg, and the recall audit — not
     rebuilt per gate. (operators/ann_index.py is the same artifact
@@ -263,13 +263,12 @@ def _emb_all_buckets(spark, sf_dir):
     # NOT fan_out here: the bucket build is ~24 md5s x 2k rows (trivial),
     # and a wide index frame just multiplies every PROBE's task count —
     # knn_lsh/multiprobe measured 1.26-1.46x slower with it (r12 A/B)
-    return session_cache_lazy(
-        "emb_all_buckets",
-        sf_dir,
-        lambda: _emb(spark, sf_dir)
-        .withColumn("bs", _all_buckets_col(F.col("embedding")))
-        .localCheckpoint(),
+    return memo(
         spark,
+        sf_dir,
+        "emb_all_buckets",
+        lambda: _emb(spark, sf_dir).withColumn("bs", _all_buckets_col(F.col("embedding"))),
+        eager=True,
     )
 
 
@@ -315,12 +314,7 @@ def knn_lsh(spark, sf_dir):
     ann_recall_audit's lsh leg, and hybrid_search_rrf's semantic leg —
     the pq_scored/ivf_scored pattern; each consumer still ranks per
     invocation."""
-    scored = session_cache_lazy(
-        "lsh_scored",
-        sf_dir,
-        lambda: _lsh_scored(spark, sf_dir).localCheckpoint(),
-        spark,
-    )
+    scored = memo(spark, sf_dir, "lsh_scored", lambda: _lsh_scored(spark, sf_dir), eager=True)
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -366,11 +360,11 @@ def embedding_cosine_pairs(spark, sf_dir):
     shared LSH bucket (sub-quadratic at scale)."""
     # fan_out: both the 8-plane md5 bucket derivation and the post-join
     # HOF cosines inherit the scan's single local split without it (r12)
-    e = session_cache(
-        fan_out(_emb(spark, sf_dir)).withColumn(
-            "bucket", _bucket_col(F.col("embedding"))
-        ),
-        "emb_bucket", sf_dir,
+    e = memo(
+        spark,
+        sf_dir,
+        "emb_bucket",
+        lambda: fan_out(_emb(spark, sf_dir)).withColumn("bucket", _bucket_col(F.col("embedding"))),
     )
     a = e.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("va"), "bucket")
     b = e.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("vb"), "bucket")
@@ -506,7 +500,7 @@ def _assign(vectors, centroids, id_col, out_rank, k):
 def _ivf_scored(spark, sf_dir):
     """(query_id, neighbor_id, sim) over the probed IVF lists — the whole
     IVF pipeline short of the final top-k rank."""
-    e = session_cache(_emb(spark, sf_dir), "emb_plain", sf_dir)
+    e = memo(spark, sf_dir, "emb_plain", lambda: _emb(spark, sf_dir))
     nv = e.agg(F.count(F.lit(1)).alias("nvec"))
     cent = (
         e.crossJoin(F.broadcast(nv))
@@ -536,11 +530,11 @@ def _ivf_scored(spark, sf_dir):
     # The probe side is n_queries × nprobe_eff rows, each carrying a 64-dim
     # embedding — ∝ (N/QUERY_MOD)·(√N/3), i.e. SUPERLINEAR in corpus size,
     # and a forced broadcast hint bypasses AQE's size checks (round-12
-    # advice). Gate the hint on a driver-side estimate from the (cached)
+    # advice). Gate the hint on a driver-side estimate from the (memoized)
     # corpus count: under the cap, broadcast so the corpus-sized list
     # assignment is never sort-merge joined (derived-frame stats are
     # unknown to CBO); over it, leave the join to AQE's runtime stats.
-    n_vec = e.count()  # bounded: the session-cached corpus frame
+    n_vec = e.count()  # bounded: the memoized corpus frame
     probe_rows = (n_vec // QUERY_MOD + 1) * nprobe_eff(
         n_vec // centroid_stride(n_vec) + 1
     )
@@ -567,12 +561,7 @@ def knn_ivf(spark, sf_dir):
     its two consumers are this gate and ann_recall_audit's ivf leg (which
     calls the gate), the same two-consumer shape as the r12 pq_scored
     memo; each consumer still ranks per invocation."""
-    scored = session_cache_lazy(
-        "ivf_scored",
-        sf_dir,
-        lambda: _ivf_scored(spark, sf_dir).localCheckpoint(),
-        spark,
-    )
+    scored = memo(spark, sf_dir, "ivf_scored", lambda: _ivf_scored(spark, sf_dir), eager=True)
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -689,12 +678,7 @@ def knn_lsh_multiprobe(spark, sf_dir):
 
     Scored frame checkpoint-memoized per corpus (r13): consumers are this
     gate and ann_recall_audit's lsh_multiprobe leg; rank per invocation."""
-    scored = session_cache_lazy(
-        "lsh_mp_scored",
-        sf_dir,
-        lambda: _lsh_mp_scored(spark, sf_dir).localCheckpoint(),
-        spark,
-    )
+    scored = memo(spark, sf_dir, "lsh_mp_scored", lambda: _lsh_mp_scored(spark, sf_dir), eager=True)
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -1034,8 +1018,8 @@ def _pq_parts(spark, sf_dir):
     unrolled Lloyd iterations, and the final (vec_id, m, cid, dist)
     assignment.
 
-    The subvector frame and the TRAINED codebook are localCheckpointed and
-    memoized per (session, sf_dir) via ``session_cache_lazy`` — the
+    The subvector frame and the TRAINED codebook are checkpoint-memoized
+    per (session, sf_dir) via ``_io.memo`` — the
     "encode the corpus once, answer queries forever" semantics the
     persisted index (operators/pq_index.py) makes explicit on disk. Four
     gates consume this trainer (pq_encode, knn_pq_adc, knn_ivf_pq, the
@@ -1049,13 +1033,14 @@ def _pq_parts(spark, sf_dir):
     # scan's split count, and the local single-split input checkpointed as
     # ONE partition — every consumer's assignment join (HOF sq-L2 over
     # ~M·K distances per vector) then ran single-threaded (r12 round)
-    sub = session_cache_lazy(
-        "pq_sub",
+    sub = memo(
+        spark,
         sf_dir,
+        "pq_sub",
         lambda: _subvectors(
             _quantize_full(fan_out(_emb(spark, sf_dir), tier="medium"), "vec_id", "embedding")
-        ).localCheckpoint(),
-        spark,
+        ),
+        eager=True,
     )
 
     def _train():
@@ -1087,9 +1072,9 @@ def _pq_parts(spark, sf_dir):
             cent = cent.join(F.broadcast(upd), ["m", "cid"], "left").select(
                 "m", "cid", F.coalesce("ncv", "cv").alias("cv")
             )
-        return cent.localCheckpoint()
+        return cent
 
-    cent = session_cache_lazy("pq_cent", sf_dir, _train, spark)
+    cent = memo(spark, sf_dir, "pq_cent", _train, eager=True)
     final = _pq_assign(sub, cent)
     return sub, cent, final
 
@@ -1245,13 +1230,12 @@ ORACLES["knn_pq_adc"] = ORACLE_PQ_ADC
 def _pq_qfull(spark, sf_dir):
     """Memoized fixed-point full-vector frame (coarse-quantizer input) —
     same train-once semantics as the _pq_parts artifacts."""
-    return session_cache_lazy(
-        "pq_qfull",
-        sf_dir,
-        lambda: _quantize_full(
-            _emb(spark, sf_dir), "vec_id", "embedding"
-        ).localCheckpoint(),
+    return memo(
         spark,
+        sf_dir,
+        "pq_qfull",
+        lambda: _quantize_full(_emb(spark, sf_dir), "vec_id", "embedding"),
+        eager=True,
     )
 
 
@@ -1313,12 +1297,7 @@ def _ivf_pq_scored_memo(spark, sf_dir):
     memo-hit side; the first consumer pays the build exactly once).
     Tag + builder are the ones ann_recall_audit already used in r12, so
     the unique-tag-per-builder contract is preserved."""
-    return session_cache_lazy(
-        "ivf_pq_scored",
-        sf_dir,
-        lambda: _ivf_pq_scored(spark, sf_dir).localCheckpoint(),
-        spark,
-    )
+    return memo(spark, sf_dir, "ivf_pq_scored", lambda: _ivf_pq_scored(spark, sf_dir), eager=True)
 
 
 def knn_ivf_pq(spark, sf_dir, scored=None):
@@ -1832,9 +1811,11 @@ ORACLES["hybrid_search_rrf"] = ORACLE_HYBRID_RRF
 
 def ann_recall_audit(spark, sf_dir):
     """Per-(method, query) recall@k of the ANN indexes vs exact top-k."""
-    bf = session_cache(
-        knn_brute_force(spark, sf_dir).select("query_id", "neighbor_id"),
-        "knn_bf_topk", sf_dir,
+    bf = memo(
+        spark,
+        sf_dir,
+        "knn_bf_topk",
+        lambda: knn_brute_force(spark, sf_dir).select("query_id", "neighbor_id"),
     )
     # both PQ legs derive from the SAME IVF+ADC scored frame — compute it
     # once (checkpoint memo) instead of re-running coarse ranking + ADC per

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ._io import load_table as _t
-from ._io import fan_out, session_cache
+from ._io import fan_out, memo
 
 
 # -- exact percentiles ---------------------------------------------------------
@@ -621,16 +621,18 @@ def kmv_set_ops(spark, sf_dir):
         "event_type", _kmv_hash(F.col("user_id")).alias("h")
     ).distinct()
     w = Window.partitionBy("event_type").orderBy("h")
-    sk = session_cache(
-        hashes.withColumn("rn", F.row_number().over(w))
+    # the sketch is <= K rows per cohort and feeds SIX consumers (per-side
+    # stats x2, the pair spine, the union build, the final join); without
+    # materialization Catalyst re-derives the corpus scan + window per
+    # consumer (7 FileScans measured) — memoizing the sketch makes the raw
+    # data cost exactly one scan at any scale
+    sk = memo(
+        spark,
+        sf_dir,
+        "kmv_sketch",
+        lambda: hashes.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= KMV_K)
         .select("event_type", "h"),
-        # the sketch is <= K rows per cohort and feeds SIX consumers
-        # (per-side stats x2, the pair spine, the union build, the final
-        # join); without materialization Catalyst re-derives the corpus
-        # scan + window per consumer (7 FileScans measured) — caching the
-        # sketch makes the raw data cost exactly one scan at any scale
-        "kmv_sketch", sf_dir,
     )
     per = sk.groupBy("event_type").agg(
         F.max("h").alias("hk"), F.count(F.lit(1)).alias("m")

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._io import fan_out, session_cache
+from ._io import fan_out, memo
 
 # doc vocabulary is synthetic SQL-ish words; "stopwords" for quality scoring
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
@@ -1647,18 +1647,20 @@ def dsir_importance_weights(spark, sf_dir):
     importance ratio — the DSIR selection step with exact integer math."""
     d = _docs(spark, sf_dir)
     tok = d.select("doc_id", "lang", F.explode(_tokens()).alias("w"))
-    # cached: counts feeds BOTH the scalar aggregate and the weight table —
-    # without the cache Catalyst instantiates the subtree twice and the
-    # corpus pays a third full token pass (vocab is corpus-sublinear, the
-    # canonical cacheable frame)
-    counts = session_cache(
-        tok.groupBy("w").agg(
+    # memoized: counts feeds BOTH the scalar aggregate and the weight table
+    # — without it Catalyst instantiates the subtree twice and the corpus
+    # pays a third full token pass (vocab is corpus-sublinear, the
+    # canonical reusable frame)
+    counts = memo(
+        spark,
+        sf_dir,
+        "dsir_counts",
+        lambda: tok.groupBy("w").agg(
             F.count(F.lit(1)).alias("cr"),
             F.sum(
                 F.when(F.col("lang") == DSIR_TARGET_LANG, 1).otherwise(0)
             ).alias("ct"),
         ),
-        "dsir_counts", sf_dir,
     )
     scal = counts.agg(
         F.sum("cr").alias("n_raw"),

@@ -102,3 +102,21 @@ def test_registry_is_sorted():
     assert list(qs) == sorted(qs)
     assert list(oracles) == sorted(oracles)
     assert len(qs) == len(oracles) == 231
+
+
+def test_rehearsal_rejects_unknown_keys_before_spark():
+    """An unknown key must fail fast instead of running nothing and
+    reporting success. JAVA_HOME points nowhere, so a Spark start would
+    die with a traceback (exit 1); exit 2 comes only from the key check."""
+    import os
+    import subprocess
+    import sys
+
+    tool = PKG.parent / "tools" / "driver_rehearsal.py"
+    env = {**os.environ, "JAVA_HOME": "/nonexistent-java-home"}
+    proc = subprocess.run(
+        [sys.executable, str(tool), "sf0.001", "no_such_gate"],
+        capture_output=True, text=True, env=env, timeout=120,
+    )
+    assert proc.returncode == 2, proc.stdout + proc.stderr
+    assert "unknown query keys: no_such_gate" in proc.stderr

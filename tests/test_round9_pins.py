@@ -17,36 +17,6 @@ from etl_process_for_detecting_fraudulent_transactions_spark.queries.relational 
 )
 
 
-def test_session_cache_bounds_storage(spark):
-    """Pin 2 (round-9 advice): gate-internal caches must not accumulate for
-    the session lifetime. `session_cache` memoizes by (tag, sf_dir) — a
-    repeat call returns the SAME cached frame, and a different sf_dir
-    unpersists the superseded one, so at most one frame per tag is live."""
-    from etl_process_for_detecting_fraudulent_transactions_spark.queries._io import (
-        _CACHE_REGISTRY,
-        session_cache,
-    )
-
-    _CACHE_REGISTRY.pop("_pin_tag", None)
-    c1 = session_cache(spark.range(5), "_pin_tag", "/a")
-    assert c1.storageLevel.useMemory
-    c2 = session_cache(spark.range(5), "_pin_tag", "/a")
-    assert c2 is c1, "repeat call must reuse the memoized frame"
-    c3 = session_cache(spark.range(7), "_pin_tag", "/b")
-    assert c3 is not c1
-    assert not c1.storageLevel.useMemory, "superseded frame must be unpersisted"
-    assert c3.storageLevel.useMemory
-    # an external clearCache (bench/rehearsal between queries) must not
-    # leave the memoized frame permanently uncached — the tail panel caught
-    # exactly this as a 4.8x dedup-family regression in round 9
-    spark.catalog.clearCache()
-    c4 = session_cache(spark.range(7), "_pin_tag", "/b")
-    assert c4 is c3
-    assert c4.storageLevel.useMemory, "memo hit must re-cache after clearCache"
-    c4.unpersist(blocking=False)
-    _CACHE_REGISTRY.pop("_pin_tag", None)
-
-
 def _hybrid_fixture(spark, tmp_path):
     """40 docs; 'the' is in EVERY doc (df=100%), r{i} unique (df=1),
     s{i%5} shared by 8 (df=20%). Query doc = vec_id 0 (vec_id % 50 == 0).

@@ -6,7 +6,8 @@ count, sorted column names, and order-insensitive exact values. Queries
 without an oracle get the weaker rows-only check, as the driver does.
 
 Usage: python tools/driver_rehearsal.py [sf0.01] [key ...]
-Prints one line per query and a final tally; exit 1 on any mismatch.
+Prints one line per query and a final tally of the queries run; exit 1 on
+any mismatch, exit 2 (before starting Spark) on a key the registry lacks.
 
 Known harness artifact: DATE columns come back as datetime.date from Spark
 and (sometimes) pandas.Timestamp-like from DuckDB — both are normalized via
@@ -124,6 +125,13 @@ def main() -> int:
         all_oracles,
         all_queries,
     )
+
+    queries, oracles = all_queries(), all_oracles()
+    unknown = sorted(only - queries.keys())
+    if unknown:
+        print(f"unknown query keys: {' '.join(unknown)}", file=sys.stderr)
+        return 2
+
     from etl_process_for_detecting_fraudulent_transactions_spark.session import get_spark
 
     spark = get_spark()
@@ -133,7 +141,6 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    queries, oracles = all_queries(), all_oracles()
     bad = []
     for i, (k, fn) in enumerate(queries.items()):
         if only and k not in only:
@@ -173,11 +180,12 @@ def main() -> int:
             bad.append((k, f"error: {exc}"))
             print(f"[{i:3}] {k}: ERROR {str(exc)[:200]}")
         finally:
-            # gates cache frames internally (shingles, signatures, hashed
-            # vectors); without this, a full sweep accumulates dozens of
-            # pinned frames that squeeze execution memory by the tail
+            # drops frames a gate .cache()s itself (ml/lsh_dedup's hashed
+            # vectors) so they don't squeeze the next gate's execution
+            # memory; the queries/_io.py memos are checkpoints, which this
+            # leaves in place (at most one per tag)
             spark.catalog.clearCache()
-    print(f"\n{len(bad)} failures / {len(queries)} queries at {sf}")
+    print(f"\n{len(bad)} failures / {len(only) or len(queries)} queries run at {sf}")
     for k, why in bad:
         print(f"  FAIL {k}: {why[:300]}")
     spark.stop()
