@@ -1,6 +1,7 @@
 """The python -m CLI (reference `python main.py` parity)."""
 
 import os
+from collections import Counter
 
 from etl_process_for_detecting_fraudulent_transactions_spark.__main__ import main
 from tests.conftest import SEED_DUMP, day_run_ts, perfbench_module, stage_day
@@ -36,6 +37,44 @@ def test_cli_processes_one_day(spark, fraud_corpus, tmp_path):
                                  fraud_corpus.blacklists[day], hist)
     out = spark.read.parquet(str(tmp_path / "store" / "rep_fraud"))
     assert out.count() == len(want) > 0
+
+
+def test_cli_leaves_the_live_session_settings(spark, tmp_path):
+    """main() inside a process that already has a session reuses it as it
+    is: get_spark's defaults (32 shuffle partitions) must not overwrite the
+    session every later caller shares (conftest's 8)."""
+    (tmp_path / "data").mkdir()
+    rc = main(["--data-dir", str(tmp_path / "data"), "--store-dir", str(tmp_path / "store"),
+               "--seed-dump", SEED_DUMP, "--show", "0"])
+    assert rc == 1
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+
+
+def test_cli_loop_keeps_every_day(spark, fraud_corpus, tmp_path):
+    """--loop consumes both pending days in one process. The CLI stamps the
+    wall clock, so both days land in one report_date partition and only
+    report_dt tells them apart; the mart must keep both days' hits."""
+    oracle = perfbench_module("oracle")
+    data = tmp_path / "data"
+    for day in fraud_corpus.dates:
+        stage_day(fraud_corpus, day, str(data))
+    rc = main(
+        ["--data-dir", str(data), "--store-dir", str(tmp_path / "store"),
+         "--seed-dump", fraud_corpus.seed_path, "--show", "0", "--loop"]
+    )
+    assert rc == 0
+    assert os.listdir(data) == []
+    assert len(os.listdir(tmp_path / "archive")) == 6
+    scd2 = oracle.Scd2Oracle()
+    want = Counter()
+    for day in fraud_corpus.dates:
+        hist = scd2.apply(fraud_corpus.snapshots[day], day_run_ts(day))
+        want.update(oracle.rep_fraud_rows(fraud_corpus.tx_path(day), day, fraud_corpus.cards(),
+                                          fraud_corpus.accounts(), fraud_corpus.clients(),
+                                          fraud_corpus.blacklists[day], hist))
+    out = spark.read.parquet(str(tmp_path / "store" / "rep_fraud")).collect()
+    assert Counter((r.event_dt, r.passport, r.fio, r.phone, r.event_type) for r in out) == want
+    assert len({r.report_dt for r in out}) == 2
 
 
 def test_bench_emits_contract_json(tmp_path):

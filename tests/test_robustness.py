@@ -1,11 +1,9 @@
 """Robustness tests: malformed CSV rows are quarantined (dead-letter), not
 fatal; typing survives junk values; the xlsx reader drops all-blank rows."""
 
-import os
-
 import pytest
 
-from tests.conftest import REFDATA
+from tests.conftest import perfbench_module
 
 GOOD_HEADER = "transaction_id;transaction_date;amount;card_num;oper_type;oper_result;terminal"
 GOOD_ROW = "1;2021-03-01 10:00:00;100,50;1111 2222 3333 4444;PAYMENT;SUCCESS;A1234"
@@ -66,21 +64,23 @@ def test_failfast_mode_raises(spark, csv_file):
         read_transactions_csv(spark, csv_file, mode="FAILFAST").collect()
 
 
-@pytest.mark.skipif(not os.path.isdir(REFDATA), reason="reference data not available")
-def test_xlsx_blank_row_handling(spark):
-    """Day-1 blacklist xlsx has 17 trailing all-blank rows (SURVEY §2.1 S2) —
-    they must not survive the read."""
+def test_xlsx_blank_row_handling(spark, tmp_path):
+    """A blacklist workbook whose data rows are followed by all-blank rows
+    (the reference's day-1 file has 17 of them, SURVEY §2.1 S2): the read
+    keeps exactly the data rows."""
+    import datetime as dt
+
     from etl_process_for_detecting_fraudulent_transactions_spark.schemas import BLACKLIST_RAW
     from etl_process_for_detecting_fraudulent_transactions_spark.sources.xlsx_source import (
         read_xlsx_df,
     )
 
-    df = read_xlsx_df(
-        spark, os.path.join(REFDATA, "passport_blacklist_01032021.xlsx"), BLACKLIST_RAW
-    )
-    rows = df.collect()
-    assert len(rows) == 7  # day-1 cumulative entries, blanks dropped
-    assert all(r.passport is not None for r in rows)
+    path = str(tmp_path / "passport_blacklist_01032021.xlsx")
+    data = [[dt.datetime(2021, 2, d, 0, 0), f"{d:04d} {d:06d}"] for d in range(1, 8)]
+    perfbench_module("corpus").write_xlsx(path, ["date", "passport"], data + [[None, None]] * 17)
+    df = read_xlsx_df(spark, path, BLACKLIST_RAW)
+    rows = df.selectExpr("date_format(date, 'yyyy-MM-dd HH:mm:ss')", "passport").collect()
+    assert sorted(map(tuple, rows)) == [(f"{d:%Y-%m-%d %H:%M:%S}", p) for d, p in data]
 
 
 def test_ndjson_corrupt_lines_quarantined(spark, tmp_path):
