@@ -15,7 +15,8 @@ everything that never reads the history: the Q1/Q2 candidates, Q4's hits
 and the flagged account and client sides. Q3's events are planned on the
 swapped history; the day's events then go through ONE card → account →
 client lookup chain (``rules.fraud_rows``), and the mart append starts only
-after the swap has committed.
+after the swap has committed. The raw CSV, cached for the dead-letter
+split, is released once the append is done.
 
 Determinism: ``run_ts`` is injected everywhere the reference stamps wall
 clock (SCD2 effective_from/to, report_dt) so golden replays are exact.
@@ -26,7 +27,7 @@ from __future__ import annotations
 import datetime as _dt
 import os
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
@@ -63,7 +64,6 @@ class PipelineState:
     compat_time_filter: bool = True
     compat_hist_join: bool = True
     archive: bool = True
-    extra: dict = field(default_factory=dict)
 
 
 def run_day(
@@ -88,28 +88,30 @@ def run_day(
 
     # per-run rebuild: seed dims + day fact + cumulative blacklist
     dims = read_seed_dims(spark, state.seed_dump_path)
-    clean_tx, corrupt_tx = split_corrupt(read_transactions_csv(spark, tx_path))
-    state.extra["corrupt_transactions"] = corrupt_tx  # dead-letter handle
-    transactions = typed_transactions(clean_tx)
+    raw_tx = read_transactions_csv(spark, tx_path)
     blacklist = typed_blacklist(read_xlsx_df(spark, bl_path, BLACKLIST_RAW))
 
     # SCD2 historization of the terminals snapshot
     snapshot = read_xlsx_df(spark, term_path, TERMINALS_SNAPSHOT)
     new_hist = scd2_apply_snapshot(state.store.read(HIST, DIM_TERMINALS_HIST), snapshot, run_ts=ts)
 
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        swap = pool.submit(inheritable_thread_target(spark)(state.store.overwrite_swap), new_hist, HIST)
-        events = [transaction_events(transactions), guessing_events(transactions)]
-        accounts = flagged_accounts(dims["accounts"], iso)
-        clients = flagged_clients(dims["clients"], blacklist, iso)
-        swap.result()
-    events.append(city_events(
-        transactions, state.store.read(HIST, DIM_TERMINALS_HIST),
-        compat_time_filter=state.compat_time_filter,
-        compat_hist_join=state.compat_hist_join,
-    ))
-    report = stamp(fraud_rows(union_rules(events), dims["cards"], accounts, clients), ts)
-    state.store.append(report, REPORT, partition_by=["report_date"])
+    transactions = typed_transactions(split_corrupt(raw_tx)[0])
+    try:
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            swap = pool.submit(inheritable_thread_target(spark)(state.store.overwrite_swap), new_hist, HIST)
+            events = [transaction_events(transactions), guessing_events(transactions)]
+            accounts = flagged_accounts(dims["accounts"], iso)
+            clients = flagged_clients(dims["clients"], blacklist, iso)
+            swap.result()
+        events.append(city_events(
+            transactions, state.store.read(HIST, DIM_TERMINALS_HIST),
+            compat_time_filter=state.compat_time_filter,
+            compat_hist_join=state.compat_hist_join,
+        ))
+        report = stamp(fraud_rows(union_rules(events), dims["cards"], accounts, clients), ts)
+        state.store.append(report, REPORT, partition_by=["report_date"])
+    finally:
+        raw_tx.unpersist()  # split_corrupt's cache: the frame returned below reads the mart
 
     if state.archive:
         archive_dir = os.path.join(data_dir, os.pardir, "archive")

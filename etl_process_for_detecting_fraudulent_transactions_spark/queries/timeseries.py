@@ -105,10 +105,8 @@ LEFT JOIN daily USING (prio, day)
 def hopping_window_stats(spark, sf_dir):
     """Overlapping (hopping) time windows in BATCH mode via ``F.window``:
     2-hour windows sliding every hour over the events stream table — each
-    event contributes to exactly two windows. The same operator the
-    streaming pipeline uses for its watermarked sliding counts
-    (streaming/pipeline.py), here gated against a SQL oracle that expands
-    each event into its two epoch-aligned window starts. The window
+    event contributes to exactly two windows. Gated against a SQL oracle
+    that expands each event into its two epoch-aligned window starts. The window
     assignment is a scan-side projection (generator of 2 rows per event);
     the one shuffle is the final (window, type) aggregate."""
     # null posture (round-8 audit): F.window drops NULL-ts rows implicitly;

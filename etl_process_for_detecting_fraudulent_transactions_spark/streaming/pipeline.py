@@ -1,27 +1,36 @@
-"""Structured Streaming variants of the ingestion + fraud rules
-(SURVEY.md §2.11 — the reference is strict daily micro-batch; this is the
-natural streaming upgrade path, additive to batch parity).
+"""Structured Streaming forms of the fraud rules and of a few registry
+operators (SURVEY.md §2.11: the reference is a strict daily micro-batch;
+this is the streaming path next to batch parity).
 
 Design:
 - ``stream_transactions``: file-source stream over a landing directory of
-  semicolon-CSV transaction files (same schema/typing as the batch reader;
-  ``maxFilesPerTrigger`` gives the daily-file cadence; source checkpointing
-  replaces the batch archive step S8).
-- ``city_hop_counts``: watermarked sliding-window aggregation — per card,
-  distinct terminals per hour window (``approx_count_distinct`` is the
-  streaming-legal distinct; exact distinct isn't supported mid-stream).
-- ``guessing_amount_stream``: the Q4 sequence matcher as a per-card stateful
-  operator via ``applyInPandasWithState`` — state = last 3 (result, amt, ts);
-  emits one row per SUCCESS completing a strictly-decreasing 3-REJECT chain
-  within 20 minutes (rep_fraud.py:187-261 semantics, streaming execution).
+  semicolon-CSV transaction files, typed by the batch ingest
+  (``plans.ingest.typed_transactions``), so the fact has one typing
+  boundary. ``maxFilesPerTrigger`` gives the daily-file cadence; source
+  checkpointing replaces the batch archive step S8.
+- Stateless rules need no streaming form: the batch functions in
+  ``plans.rules`` (Q1 ``passport_fraud``, Q2 ``account_fraud``) are
+  stream-static broadcast joins and a generator, and run unchanged on the
+  streaming frame. ``card_sessions``, ``dedup_stream`` and
+  ``reject_then_success_join`` likewise run on batch and streaming frames.
+- Per-key sequence rules (Q4 ``guessing_amount_stream``, the intended Q3
+  ``city_fraud_stream``, and the funnel, EWMA, as-of and drift monitors)
+  share one ``applyInPandasWithState`` skeleton, ``_stateful_scan``; each
+  supplies only its projection, sort keys, initial state and per-key step.
+  Q4's step is ``match_step``, the rep_fraud.py:187-261 matcher.
+- ``stream_events_to_mart``, ``near_dup_stream`` and ``ann_probe_stream``
+  write through ``foreachBatch``.
 
-Scale notes: state is keyed by card_num → shuffle-partitioned; watermark
-bounds state size; a timeout (processing-time) garbage-collects idle cards.
+Scale notes: state is keyed (card, user or series) and shuffle-partitioned;
+watermarks bound the windowed and join state; a processing-time timeout
+drops the state of idle keys.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import datetime as dt
+from collections.abc import Callable, Iterator
+from itertools import accumulate
 
 import numpy as np
 import pandas as pd
@@ -38,8 +47,11 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..schemas import TRANSACTIONS_RAW
 from ..functions.casts import int_amount
+from ..plans.ingest import typed_transactions
+from ..plans.report import stamp
+from ..plans.rules import flagged_accounts, flagged_clients, fraud_rows
+from ..schemas import TRANSACTIONS_RAW
 
 EVENT_SCHEMA = StructType(
     [
@@ -59,42 +71,22 @@ STATE_SCHEMA = StructType(
 
 
 def stream_transactions(spark: SparkSession, landing_dir: str, max_files: int = 1) -> DataFrame:
-    """File-source stream of incoming transactions (typed, comma-decimal
-    fixed), one daily file per micro-batch by default."""
-    raw = (
+    """File-source stream of incoming transactions, one daily file per
+    micro-batch by default, typed exactly as batch (``typed_transactions``:
+    an amount that does not parse is NULL, not a failed query)."""
+    return typed_transactions(
         spark.readStream.schema(TRANSACTIONS_RAW)
         .option("sep", ";")
         .option("header", True)
         .option("maxFilesPerTrigger", max_files)
         .csv(landing_dir)
     )
-    return raw.select(
-        F.col("transaction_id").alias("trans_id"),
-        F.try_to_timestamp("transaction_date").alias("trans_date"),
-        F.col("card_num"),
-        F.col("oper_type"),
-        F.regexp_replace("amount", ",", ".").cast("decimal(10,2)").alias("amt"),
-        F.col("oper_result"),
-        F.col("terminal"),
-    )
-
-
-def city_hop_counts(tx: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Watermarked hourly sliding window: distinct terminals per card —
-    the streaming precursor of the city-fraud rule (a terminal→city lookup
-    join slots in front unchanged)."""
-    return (
-        tx.withWatermark("trans_date", watermark)
-        .groupBy(F.window("trans_date", "1 hour", "30 minutes"), F.col("card_num"))
-        .agg(F.approx_count_distinct("terminal").alias("n_terminals"))
-        .filter(F.col("n_terminals") > 1)
-    )
 
 
 def card_sessions(tx: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours") -> DataFrame:
     """Gap-based session windows per card: consecutive transactions closer
     than ``gap`` merge into one session (``session_window`` — dynamic-width,
-    unlike the fixed sliding window above). State is per (card, open
+    unlike a fixed sliding window). State is per (card, open
     session); the watermark closes sessions and garbage-collects their
     state, so memory is bounded by concurrently-active cards, not history.
     Works identically on a batch frame (same function, no streaming-only
@@ -104,7 +96,7 @@ def card_sessions(tx: DataFrame, gap: str = "30 minutes", watermark: str = "2 ho
         .groupBy(F.session_window("trans_date", gap), F.col("card_num"))
         .agg(
             F.count(F.lit(1)).alias("n_tx"),
-            F.sum(F.col("amt").cast("decimal(18,4)")).cast("double").alias("amt_sum"),
+            F.sum("amt").cast("double").alias("amt_sum"),
         )
         .select(
             "card_num",
@@ -191,8 +183,53 @@ def match_step(
     return is_fraud
 
 
+_IDLE_MS = 6 * 60 * 60 * 1000  # processing time after which a key's state is dropped
+
+
+def _stateful_scan(
+    frame: DataFrame,
+    key: str,
+    sort_by: list[str],
+    out_schema: StructType,
+    state_schema: StructType,
+    init: tuple,
+    step: Callable[[object, tuple, pd.DataFrame], tuple[tuple, list[tuple]]],
+) -> DataFrame:
+    """Per-key ordered scan with state across micro-batches
+    (``applyInPandasWithState``, append output).
+
+    Per key and micro-batch, the key's rows are stable-sorted by ``sort_by``
+    and ``step(key, state, rows)`` returns the new state tuple and a list of
+    output tuples in ``out_schema`` order; a key without state starts from
+    ``init``. A key idle for ``_IDLE_MS`` of processing time loses its state:
+    the timeout call removes it, since updating it there would re-arm the
+    timer forever. Cross-batch order comes from the file cadence.
+    """
+    # nullable Int64: a long output column may hold NULL (an unreached funnel step)
+    longs = {f.name: "Int64" for f in out_schema.fields if isinstance(f.dataType, LongType)}
+
+    def scan(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            state.remove()
+            return
+        rows = pd.concat(list(pdfs)).sort_values(sort_by, kind="mergesort")
+        new_state, out = step(key[0], state.get if state.exists else init, rows)
+        state.update(new_state)
+        state.setTimeoutDuration(_IDLE_MS)
+        if out:
+            yield pd.DataFrame(out, columns=out_schema.fieldNames()).astype(longs)
+
+    return frame.groupBy(key).applyInPandasWithState(
+        scan,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    )
+
+
 def guessing_amount_stream(tx: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Q4 as a stateful streaming operator: per-card applyInPandasWithState.
+    """Q4 as a stateful streaming operator: a per-card ``match_step`` scan.
 
     State carries the last 3 (oper_result, int_amount, ts). Emits
     (card_num, event_dt, 'guessing_amount_fraud') rows in append mode.
@@ -209,46 +246,18 @@ def guessing_amount_stream(tx: DataFrame, watermark: str = "1 hour") -> DataFram
         )
     )
 
-    def matcher(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # idle-card GC: without remove() the timeout invocation would
-            # re-update state and re-arm forever — state would be immortal
-            state.remove()
-            return
-        if state.exists:
-            results_s, amts_s, ts_s = state.get
-            results = results_s.split("|") if results_s else []
-            amts = [int(a) for a in amts_s.split("|")] if amts_s else []
-            ts_us = [int(t) for t in ts_s.split("|")] if ts_s else []
-        else:
-            results, amts, ts_us = [], [], []
-        events = []
-        batch = [pdf for pdf in pdfs]
-        if batch:
-            allrows = pd.concat(batch).sort_values("trans_date")
-            for r in allrows.itertuples():
-                if match_step(results, amts, ts_us, r.oper_result, int(r.amt_int), int(r.ts_us)):
-                    events.append((key[0], r.trans_date, "guessing_amount_fraud"))
-        state.update(
-            (
-                "|".join(results),
-                "|".join(str(a) for a in amts),
-                "|".join(str(t) for t in ts_us),
-            )
-        )
-        state.setTimeoutDuration(6 * 60 * 60 * 1000)  # gc idle cards after 6h
-        if events:
-            yield pd.DataFrame(events, columns=["card_num", "event_dt", "event_type"])
+    def step(card, st, rows):
+        results, amts, ts_us = (s.split("|") if s else [] for s in st)
+        amts, ts_us = [int(a) for a in amts], [int(t) for t in ts_us]
+        events = [
+            (card, r.trans_date, "guessing_amount_fraud")
+            for r in rows.itertuples()
+            if match_step(results, amts, ts_us, r.oper_result, int(r.amt_int), int(r.ts_us))
+        ]
+        return ("|".join(results), "|".join(map(str, amts)), "|".join(map(str, ts_us))), events
 
-    return filtered.groupBy("card_num").applyInPandasWithState(
-        matcher,
-        outputStructType=EVENT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
+    return _stateful_scan(filtered, "card_num", ["trans_date"], EVENT_SCHEMA, STATE_SCHEMA,
+                          ("", "", ""), step)
 
 
 def stream_events_to_mart(
@@ -271,10 +280,6 @@ def stream_events_to_mart(
     semantics (exactly-once via checkpoint + batchId) without a custom sink.
     Returns the StreamingQuery.
     """
-    import datetime as dt
-
-    from ..plans.report import stamp
-    from ..plans.rules import flagged_accounts, flagged_clients, fraud_rows
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -313,6 +318,7 @@ def city_fraud_stream(
     the key set. Batch Q3 reports max(trans_date) per card per day; the
     streaming form naturally reports every boundary as it happens.
     """
+    within_us = within_minutes * 60 * 1_000_000
     filtered = tx_with_city.withWatermark("trans_date", watermark).select(
         "card_num",
         "trans_date",
@@ -320,150 +326,18 @@ def city_fraud_stream(
         "terminal_city",
     )
 
-    def matcher(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()  # idle-card GC (see guessing matcher note)
-            return
-        if state.exists:
-            last_ts_s, last_city = state.get
-            last_ts = int(last_ts_s) if last_ts_s else None
-        else:
-            last_ts, last_city = None, None
+    def step(card, st, rows):
+        last_ts, last_city = int(st[0]) if st[0] else None, st[1]
         events = []
-        batch = [pdf for pdf in pdfs]
-        if batch:
-            for r in pd.concat(batch).sort_values("trans_date").itertuples():
-                city = r.terminal_city
-                if (
-                    last_ts is not None
-                    and last_city is not None
-                    and city is not None
-                    and city != last_city
-                    and (int(r.ts_us) - last_ts) <= within_minutes * 60 * 1_000_000
-                ):
-                    events.append((key[0], r.trans_date, "city_fraud"))
-                last_ts, last_city = int(r.ts_us), city
-        state.update((str(last_ts) if last_ts is not None else "", last_city))
-        state.setTimeoutDuration(6 * 60 * 60 * 1000)
-        if events:
-            yield pd.DataFrame(events, columns=["card_num", "event_dt", "event_type"])
+        for r in rows.itertuples():
+            city, ts = r.terminal_city, int(r.ts_us)
+            if last_city is not None and city is not None and city != last_city and ts - last_ts <= within_us:
+                events.append((card, r.trans_date, "city_fraud"))
+            last_ts, last_city = ts, city
+        return ("" if last_ts is None else str(last_ts), last_city), events
 
-    return filtered.groupBy("card_num").applyInPandasWithState(
-        matcher,
-        outputStructType=EVENT_SCHEMA,
-        stateStructType=CITY_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-def passport_fraud_stream(
-    tx: DataFrame,
-    cards: DataFrame,
-    accounts: DataFrame,
-    clients: DataFrame,
-    blacklist: DataFrame,
-    run_date,
-) -> DataFrame:
-    """Q1 on a streaming transaction frame.
-
-    The batch rule (plans/rules.py:passport_fraud) is a pure DataFrame
-    transform built from stream-legal operators (broadcast stream-static
-    left joins + a generator), so the streaming variant IS the batch function —
-    same code path, zero divergence risk between modes. Stateless: no
-    watermark needed, append output.
-    """
-    from ..plans.rules import passport_fraud
-
-    return passport_fraud(tx, cards, accounts, clients, blacklist, run_date)
-
-
-def account_fraud_stream(
-    tx: DataFrame,
-    cards: DataFrame,
-    accounts: DataFrame,
-    clients: DataFrame,
-    run_date,
-) -> DataFrame:
-    """Q2 on a streaming transaction frame — same reuse as
-    passport_fraud_stream (stateless stream-static join rule)."""
-    from ..plans.rules import account_fraud
-
-    return account_fraud(tx, cards, accounts, clients, run_date)
-
-
-def guessing_amount_stream_tws(tx: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Q4 matcher on the Spark 4 ``transformWithStateInPandas`` API (the
-    successor of applyInPandasWithState: typed state handles, timers, easier
-    state evolution). Same semantics as ``guessing_amount_stream`` — shared
-    ``match_step`` core — so both APIs are covered by the same golden test
-    expectations. Requires the RocksDB state-store provider AND
-    ``google.protobuf`` (the API's Python runner dependency — absent in some
-    environments; ``applyInPandasWithState`` remains the dependency-free path).
-    """
-    try:  # fail fast with a clear message where the runner would crash opaquely
-        import google.protobuf.descriptor  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            "transformWithStateInPandas requires google.protobuf; "
-            "use guessing_amount_stream (applyInPandasWithState) instead"
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    filtered = (
-        tx.withWatermark("trans_date", watermark)
-        .filter(F.col("oper_type").isin("PAYMENT", "WITHDRAW"))
-        .select(
-            "card_num",
-            "trans_date",
-            F.unix_micros("trans_date").alias("ts_us"),
-            int_amount(F.col("amt")).alias("amt_int"),
-            "oper_result",
-        )
-    )
-
-    class Q4Processor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._hist = handle.getValueState(
-                "hist", "results string, amts string, ts_us string"
-            )
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            if self._hist.exists():
-                results_s, amts_s, ts_s = self._hist.get()
-                results = results_s.split("|") if results_s else []
-                amts = [int(x) for x in amts_s.split("|")] if amts_s else []
-                ts_us = [int(x) for x in ts_s.split("|")] if ts_s else []
-            else:
-                results, amts, ts_us = [], [], []
-            events = []
-            batch = [pdf for pdf in rows]
-            if batch:
-                for r in pd.concat(batch).sort_values("trans_date").itertuples():
-                    if match_step(
-                        results, amts, ts_us, r.oper_result, int(r.amt_int), int(r.ts_us)
-                    ):
-                        events.append((key[0], r.trans_date, "guessing_amount_fraud"))
-            self._hist.update(
-                ("|".join(results), "|".join(map(str, amts)), "|".join(map(str, ts_us)))
-            )
-            if events:
-                yield pd.DataFrame(events, columns=["card_num", "event_dt", "event_type"])
-
-        def close(self) -> None:
-            pass
-
-    return filtered.groupBy("card_num").transformWithStateInPandas(
-        Q4Processor(),
-        outputStructType=EVENT_SCHEMA,
-        outputMode="append",
-        timeMode="None",
-    )
+    return _stateful_scan(filtered, "card_num", ["trans_date"], EVENT_SCHEMA, CITY_STATE_SCHEMA,
+                          ("", None), step)
 
 
 # -- streaming funnel ---------------------------------------------------------
@@ -495,95 +369,52 @@ def funnel_stream(
     stateful streaming operator: state = the three step timestamps, O(1)
     per user; an output row is emitted each time a user's stage ADVANCES.
 
-    Same ordering contract as the other stateful streams here (each batch
-    is sorted by event time; cross-batch order comes from the replayed
-    file cadence): the first view seen IS the min view. Equivalence with
-    the batch funnel on an ordered replay is pinned in
-    tests/test_streaming.py."""
+    Each micro-batch is scanned in event-time order, so the first view
+    seen IS the min view. Equivalence with the batch funnel on an ordered
+    replay is pinned in tests/test_streaming.py."""
     w_us = window_hours * 3600 * 1_000_000
+    event_type = F.col("event_type")
     filtered = (
-        ev.filter(F.col("event_type").isin("view", "click", "purchase"))
+        ev.filter(event_type.isin("view", "click", "purchase"))
         .withWatermark("ts", watermark)
-        .select("user_id", "event_type", "ts", F.unix_micros("ts").alias("ts_us"))
+        .select(
+            "user_id",
+            "event_type",
+            "ts",
+            F.unix_micros("ts").alias("ts_us"),
+            # equal-timestamp ties scan in FUNNEL-STEP order so a click@T
+            # qualifies against a view@T (batch semantics: the window bound
+            # is inclusive)
+            F.when(event_type == "view", 0).when(event_type == "click", 1).otherwise(2).alias("_step"),
+        )
     )
 
-    def matcher(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # retention horizon: forget idle users entirely (a later event
-            # restarts their funnel) — without remove() state is immortal
-            state.remove()
-            return
-        t_view, t_click, t_purchase = state.get if state.exists else (0, 0, 0)
+    def step(user, st, rows):
+        t_view, t_click, t_purchase = st
         out = []
 
         def stage() -> int:
             return 3 if t_purchase else 2 if t_click else 1 if t_view else 0
 
         before = stage()
-        batch = [pdf for pdf in pdfs]
-        if batch:
-            # equal-timestamp ties process in FUNNEL-STEP order so a
-            # click@T qualifies against a view@T (batch semantics: the
-            # window bound is inclusive). Without the secondary key,
-            # pandas' unstable quicksort would order ties arbitrarily and
-            # the stream could nondeterministically skip a step.
-            allrows = pd.concat(batch)
-            allrows = allrows.assign(
-                _step=allrows["event_type"].map({"view": 0, "click": 1, "purchase": 2})
-            ).sort_values(["ts_us", "_step"], kind="mergesort")
-            for r in allrows.itertuples():
-                ts = int(r.ts_us)
-                if r.event_type == "view" and not t_view:
-                    t_view = ts
-                elif (
-                    r.event_type == "click"
-                    and t_view
-                    and not t_click
-                    and t_view <= ts <= t_view + w_us
-                ):
-                    t_click = ts
-                elif (
-                    r.event_type == "purchase"
-                    and t_click
-                    and not t_purchase
-                    and t_click <= ts <= t_click + w_us
-                ):
-                    t_purchase = ts
-                if stage() > before:
-                    # OUTPUT uses NULL for steps not yet reached — a 0
-                    # sentinel in a LongType timestamp column reads as
-                    # epoch-1970 downstream; 0 stays internal to the state
-                    # tuple only (state columns are non-nullable longs)
-                    out.append(
-                        (
-                            key[0],
-                            stage(),
-                            t_view or None,
-                            t_click or None,
-                            t_purchase or None,
-                        )
-                    )
-                    before = stage()
-        state.update((t_view, t_click, t_purchase))
-        state.setTimeoutDuration(6 * 60 * 60 * 1000)
-        if out:
-            pdf = pd.DataFrame(
-                out,
-                columns=["user_id", "stage", "t_view_us", "t_click_us", "t_purchase_us"],
-            )
-            for c in ("t_view_us", "t_click_us", "t_purchase_us"):
-                pdf[c] = pdf[c].astype("Int64")  # nullable long for Arrow
-            yield pdf
+        for r in rows.itertuples():
+            ts = int(r.ts_us)
+            if r.event_type == "view" and not t_view:
+                t_view = ts
+            elif r.event_type == "click" and t_view and not t_click and t_view <= ts <= t_view + w_us:
+                t_click = ts
+            elif r.event_type == "purchase" and t_click and not t_purchase and t_click <= ts <= t_click + w_us:
+                t_purchase = ts
+            if stage() > before:
+                # OUTPUT uses NULL for steps not yet reached — a 0 sentinel
+                # in a LongType timestamp column reads as epoch-1970
+                # downstream; 0 stays internal to the (non-nullable) state
+                before = stage()
+                out.append((user, before, t_view or None, t_click or None, t_purchase or None))
+        return (t_view, t_click, t_purchase), out
 
-    return filtered.groupBy("user_id").applyInPandasWithState(
-        matcher,
-        outputStructType=FUNNEL_OUT_SCHEMA,
-        stateStructType=FUNNEL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
+    return _stateful_scan(filtered, "user_id", ["ts_us", "_step"], FUNNEL_OUT_SCHEMA,
+                          FUNNEL_STATE_SCHEMA, (0, 0, 0), step)
 
 
 # -- streaming incremental near-dup detection ---------------------------------
@@ -797,10 +628,9 @@ def ewma_stream(ev: DataFrame) -> DataFrame:
     cross-multiplied |x - s|*5 > s test), carrying the pre-update EWMA so
     consumers can reconstruct the decision.
 
-    Same ordering contract as the other stateful streams: each batch sorts
-    by (ts, event_id); cross-batch order comes from the replayed file
-    cadence. Exact-replay equivalence against an independent plain-Python
-    recurrence is pinned in tests/test_streaming.py."""
+    Each micro-batch is scanned in (ts, event_id) order. Exact-replay
+    equivalence against an independent plain-Python recurrence is pinned
+    in tests/test_streaming.py."""
     filtered = (
         ev.filter(F.col("value").isNotNull())
         .select(
@@ -811,42 +641,22 @@ def ewma_stream(ev: DataFrame) -> DataFrame:
         )
     )
 
-    def scan(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        s, n = state.get if state.exists else (0, 0)
+    def step(series, st, rows):
+        s, n = st
         out = []
-        batch = [pdf for pdf in pdfs]
-        if batch:
-            allrows = pd.concat(batch).sort_values(
-                ["ts_us", "event_id"], kind="mergesort"
-            )
-            for r in allrows.itertuples():
-                x = int(r.x_milli)
-                if n > 0:
-                    if abs(x - s) * 5 > s:
-                        out.append((key[0], int(r.event_id), x, s))
-                    s = (3 * x + 13 * s) // 16
-                else:
-                    s = x
-                n += 1
-        state.update((s, n))
-        state.setTimeoutDuration(6 * 60 * 60 * 1000)
-        if out:
-            yield pd.DataFrame(
-                out, columns=["event_type", "event_id", "x_milli", "s_prev_milli"]
-            )
+        for r in rows.itertuples():
+            x = int(r.x_milli)
+            if n > 0:
+                if abs(x - s) * 5 > s:
+                    out.append((series, int(r.event_id), x, s))
+                s = (3 * x + 13 * s) // 16
+            else:
+                s = x
+            n += 1
+        return (s, n), out
 
-    return filtered.groupBy("event_type").applyInPandasWithState(
-        scan,
-        outputStructType=EWMA_OUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
+    return _stateful_scan(filtered, "event_type", ["ts_us", "event_id"], EWMA_OUT_SCHEMA,
+                          EWMA_STATE_SCHEMA, (0, 0), step)
 
 
 # -- streaming backward as-of enrichment ----------------------------------------
@@ -855,7 +665,7 @@ def ewma_stream(ev: DataFrame) -> DataFrame:
 # with it — the classic stream-enrichment shape where the batch op's carry
 # window becomes O(1) state. Same semantics as the batch gate: inclusive
 # at the same instant, same-(ts) click ties resolve to the max event_id
-# (batch sorts by (ts, kind, event_id); the walk below replays that order
+# (batch sorts by (ts, kind, event_id); the scan replays that order
 # inside each micro-batch, and the >=-replace rule makes the max-id click
 # win among equal timestamps). Ordered-replay equivalence with the batch
 # operator is pinned in tests/test_streaming.py.
@@ -875,14 +685,6 @@ ASOF_OUT_SCHEMA = StructType(
 # sentinel — keeps a click landing at exactly epoch 0 microseconds (or with
 # event_id 0 on the tie-break) distinguishable from "no click yet", matching
 # the batch asof_join_nearest this operator is pinned against.
-#
-# STATE-SCHEMA BREAK (round 6): this schema widened from 2 fields to 3 when
-# has_click was added. Spark validates state schema on restart, so a
-# checkpoint written by the 2-field version fails validation — restarting an
-# existing asof_stream deployment across that change requires a FRESH
-# checkpoint directory (state is rebuilt from the watermarked replay). The
-# sentinel fix itself is correct and intentional; only the restart path is
-# affected.
 ASOF_STATE_SCHEMA = StructType(
     [
         StructField("click_us", LongType()),
@@ -901,73 +703,27 @@ def asof_stream(ev: DataFrame, watermark: str = "48 hours") -> DataFrame:
             "event_type",
             "event_id",
             F.unix_micros("ts").alias("ts_us"),
-        )
-    )
-
-    def matcher(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        click_us, click_id, has_click = (
-            state.get if state.exists else (0, 0, False)
-        )
-        out = []
-        batch = [pdf for pdf in pdfs]
-        if batch:
-            allrows = pd.concat(batch)
             # clicks before purchases at the same instant (kind 0 < 1:
             # inclusive match), event_id ascending so the last same-ts
             # click to apply is the max id — the batch tie-break
-            allrows = allrows.assign(
-                _kind=(allrows["event_type"] == "purchase").astype("int64")
-            ).sort_values(["ts_us", "_kind", "event_id"], kind="mergesort")
-            for r in allrows.itertuples():
-                if r.event_type == "click":
-                    if (
-                        not has_click
-                        or int(r.ts_us) > click_us
-                        or (
-                            int(r.ts_us) == click_us
-                            and int(r.event_id) > click_id
-                        )
-                    ):
-                        click_us, click_id = int(r.ts_us), int(r.event_id)
-                        has_click = True
-                elif has_click:
-                    out.append(
-                        (
-                            int(r.event_id),
-                            key[0],
-                            int(r.ts_us),
-                            click_us,
-                            int(r.ts_us) - click_us,
-                            click_id,
-                        )
-                    )
-        state.update((click_us, click_id, has_click))
-        state.setTimeoutDuration(6 * 60 * 60 * 1000)
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "event_id",
-                    "user_id",
-                    "purch_us",
-                    "click_us",
-                    "gap_us",
-                    "click_event_id",
-                ],
-            )
-
-    return filtered.groupBy("user_id").applyInPandasWithState(
-        matcher,
-        outputStructType=ASOF_OUT_SCHEMA,
-        stateStructType=ASOF_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+            (F.col("event_type") == "purchase").cast("int").alias("_kind"),
+        )
     )
+
+    def step(user, st, rows):
+        click_us, click_id, has_click = st
+        out = []
+        for r in rows.itertuples():
+            ts, eid = int(r.ts_us), int(r.event_id)
+            if r.event_type == "click":
+                if not has_click or ts > click_us or (ts == click_us and eid > click_id):
+                    click_us, click_id, has_click = ts, eid, True
+            elif has_click:
+                out.append((eid, user, ts, click_us, ts - click_us, click_id))
+        return (click_us, click_id, has_click), out
+
+    return _stateful_scan(filtered, "user_id", ["ts_us", "_kind", "event_id"], ASOF_OUT_SCHEMA,
+                          ASOF_STATE_SCHEMA, (0, 0, False), step)
 
 
 # -- streaming distribution-drift monitor ----------------------------------------
@@ -1022,12 +778,7 @@ def drift_stream(
 ) -> DataFrame:
     nbins = len(ref_counts)
     ref_n = sum(ref_counts)
-    ref_cum = []
-    acc = 0
-    for c in ref_counts:
-        acc += c
-        ref_cum.append(acc)
-    state_schema = drift_state_schema(nbins)
+    ref_cum = list(accumulate(ref_counts))
 
     filtered = (
         ev.filter(F.col("value").isNotNull())
@@ -1038,48 +789,14 @@ def drift_stream(
         )
     )
 
-    def monitor(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            st = list(state.get)
-        else:
-            st = [0] * (nbins + 1)
-        n, counts = st[0], st[1:]
-        for pdf in pdfs:
-            vs = pdf["v"].to_numpy(dtype=np.int64)
-            bc = bin_counts(vs, lo, width, nbins)
-            for i in range(nbins):
-                counts[i] += int(bc[i])
-            n += len(vs)
-        state.update((n, *counts))
-        state.setTimeoutDuration(6 * 60 * 60 * 1000)
-        cum = 0
-        maxd = 0
-        for i in range(nbins):
-            cum += counts[i]
-            d = abs(cum * ref_n - ref_cum[i] * n)
-            if d > maxd:
-                maxd = d
+    def step(event_type, st, rows):
+        vs = rows["v"].to_numpy(dtype=np.int64)
+        n = st[0] + len(vs)
+        counts = [c + int(b) for c, b in zip(st[1:], bin_counts(vs, lo, width, nbins))]
+        maxd = max(abs(cum * ref_n - rc * n) for cum, rc in zip(accumulate(counts), ref_cum))
         drift_ppm = (maxd * 1_000_000 // (n * ref_n)) if n and ref_n else 0
-        yield pd.DataFrame(
-            [
-                {
-                    "event_type": key[0],
-                    "n_seen": n,
-                    "max_cross_diff": maxd,
-                    "drift_ppm": drift_ppm,
-                }
-            ]
-        )
+        return (n, *counts), [(event_type, n, maxd, drift_ppm)]
 
-    return filtered.groupBy("event_type").applyInPandasWithState(
-        monitor,
-        outputStructType=DRIFT_OUT_SCHEMA,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
+    # binning is order-free: no sort keys
+    return _stateful_scan(filtered, "event_type", [], DRIFT_OUT_SCHEMA, drift_state_schema(nbins),
+                          (0,) * (nbins + 1), step)

@@ -53,16 +53,23 @@ def test_cli_leaves_the_live_session_settings(spark, tmp_path):
 def test_cli_loop_keeps_every_day(spark, fraud_corpus, tmp_path):
     """--loop consumes both pending days in one process. The CLI stamps the
     wall clock, so both days land in one report_date partition and only
-    report_dt tells them apart; the mart must keep both days' hits."""
+    report_dt tells them apart; the mart must keep both days' hits. The
+    days leave no RDD cached behind them."""
     oracle = perfbench_module("oracle")
     data = tmp_path / "data"
     for day in fraud_corpus.dates:
         stage_day(fraud_corpus, day, str(data))
+
+    def cached_rdds():
+        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    before = cached_rdds()
     rc = main(
         ["--data-dir", str(data), "--store-dir", str(tmp_path / "store"),
          "--seed-dump", fraud_corpus.seed_path, "--show", "0", "--loop"]
     )
     assert rc == 0
+    assert cached_rdds() - before == set()
     assert os.listdir(data) == []
     assert len(os.listdir(tmp_path / "archive")) == 6
     scd2 = oracle.Scd2Oracle()

@@ -1,19 +1,15 @@
-"""Streaming variant tests: pure matcher unit tests, a golden replay of the
-stateful Q4 matcher over the reference's day-1 transactions file
-(availableNow trigger → memory sink), and stream-vs-batch equivalence on
-the generated corpus. Only the tests marked ``needs_refdata`` read the
-reference's files."""
+"""Streaming variant tests: pure matcher unit tests, then every streaming
+rule run on files (availableNow trigger → memory sink) and compared with
+the batch function, or a plain-Python model, on the same input. The
+transaction files come from the generated corpus (``fraud_corpus``) or
+are written by the test itself."""
 
+import datetime as dt
 import os
 import shutil
+from collections import Counter
 
-import pytest
-
-from tests.conftest import REFDATA
-
-needs_refdata = pytest.mark.skipif(
-    not os.path.isdir(REFDATA), reason="reference data not available"
-)
+from tests.conftest import perfbench_module
 
 MIN20 = 20 * 60 * 1_000_000
 
@@ -103,135 +99,139 @@ def test_match_step_rolling_window():
     assert _run(seq) == [4]
 
 
-@needs_refdata
-def test_guessing_amount_stream_golden(spark, tmp_path):
-    """Day-1 file through the stateful streaming matcher reproduces the
-    batch golden event (card of passport 5771 567535 @ 22:36:38)."""
-    from etl_process_for_detecting_fraudulent_transactions_spark.streaming.pipeline import (
-        guessing_amount_stream,
-        stream_transactions,
-    )
-
-    landing = tmp_path / "landing"
+def _land(landing, *files):
+    """Copy ``files`` into a new landing directory, giving them increasing
+    modification times: the file source takes files oldest first, so with
+    ``maxFilesPerTrigger=1`` each file is one micro-batch, in argument order."""
     landing.mkdir()
-    shutil.copy(
-        os.path.join(REFDATA, "transactions_01032021.txt"),
-        landing / "transactions_01032021.txt",
-    )
+    for i, src in enumerate(files):
+        dst = landing / os.path.basename(src)
+        shutil.copyfile(src, dst)
+        os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))
+    return str(landing)
 
-    tx = stream_transactions(spark, str(landing))
-    events = guessing_amount_stream(tx)
-    q = (
-        events.writeStream.format("memory")
-        .queryName("guess_events")
+
+def _to_memory(df, name, checkpoint):
+    """Start ``df`` into the memory sink ``name`` (availableNow trigger)."""
+    return (
+        df.writeStream.format("memory")
+        .queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .option("checkpointLocation", str(checkpoint))
         .trigger(availableNow=True)
         .start()
     )
-    _drain_until(
-        q, lambda: spark.sql("SELECT COUNT(*) FROM guess_events").collect()[0][0],
-        expected=1, timeout=120,
+
+
+def _batch_tx(spark, path):
+    """The batch ingest of ``path`` (one file or a list read as one frame):
+    the typed fact ``run_day`` builds."""
+    from etl_process_for_detecting_fraudulent_transactions_spark.plans.ingest import typed_transactions
+    from etl_process_for_detecting_fraudulent_transactions_spark.sources.csv_source import (
+        read_transactions_csv,
+        split_corrupt,
     )
-    rows = spark.sql("SELECT * FROM guess_events").collect()
-    assert len(rows) == 1
-    assert rows[0].event_dt.strftime("%Y-%m-%d %H:%M:%S") == "2021-03-01 22:36:38"
-    assert rows[0].event_type == "guessing_amount_fraud"
+
+    return typed_transactions(split_corrupt(read_transactions_csv(spark, path))[0])
 
 
-@needs_refdata
-def test_three_day_stream_continuous_state(spark, tmp_path):
-    """3 daily files in one stream (maxFilesPerTrigger=1 → 3 micro-batches):
-    reproduces the day-1 golden event AND finds one cross-midnight chain
-    (2021-03-03 00:13:21) that per-day batch processing cannot see — the
-    matcher's state legitimately spans file boundaries."""
+def _write_tx(path, rows):
+    with open(path, "w", encoding="utf-8") as f:
+        f.write("transaction_id;transaction_date;amount;card_num;oper_type;oper_result;terminal\n")
+        f.writelines(";".join(r) + "\n" for r in rows)
+    return str(path)
+
+
+def test_stream_transactions_types_like_batch(spark, tmp_path):
+    """The stream types the fact at the batch ingest boundary: an amount
+    that does not parse and one that overflows decimal(10,2) become NULL,
+    as in batch, rather than failing the query under ANSI casts."""
+    from decimal import Decimal
+
+    from etl_process_for_detecting_fraudulent_transactions_spark.streaming.pipeline import (
+        stream_transactions,
+    )
+
+    src = _write_tx(tmp_path / "transactions_01032021.txt", [
+        ("1", "2021-03-01 10:00:00", "1046,40", "c1", "PAYMENT", "SUCCESS", "P1"),
+        ("2", "2021-03-01 10:05:00", "12,x", "c1", "PAYMENT", "REJECT", "P1"),
+        ("3", "2021-03-01 10:10:00", "123456789012,00", "c2", "WITHDRAW", "SUCCESS", "P2"),
+    ])
+    want = Counter(tuple(r) for r in _batch_tx(spark, src).collect())
+    q = _to_memory(stream_transactions(spark, _land(tmp_path / "landing", src)),
+                   "typed_tx", tmp_path / "ckpt")
+    q.awaitTermination(120)
+    got = spark.sql("SELECT * FROM typed_tx").collect()
+    assert Counter(tuple(r) for r in got) == want
+    assert {r.trans_id: r.amt for r in got} == {"1": Decimal("1046.40"), "2": None, "3": None}
+
+
+def test_guessing_amount_stream_matches_batch_per_day(spark, fraud_corpus, tmp_path):
+    """Per generated day, the stateful Q4 matcher over the day's file emits
+    exactly batch ``guessing_events`` of the same file, as a multiset."""
+    from etl_process_for_detecting_fraudulent_transactions_spark.plans.rules import guessing_events
     from etl_process_for_detecting_fraudulent_transactions_spark.streaming.pipeline import (
         guessing_amount_stream,
         stream_transactions,
     )
 
-    landing = tmp_path / "landing3"
-    landing.mkdir()
-    for d in ("01", "02", "03"):
-        shutil.copy(
-            os.path.join(REFDATA, f"transactions_{d}032021.txt"),
-            landing / f"transactions_{d}032021.txt",
-        )
-    tx = stream_transactions(spark, str(landing))
-    q = (
-        guessing_amount_stream(tx)
-        .writeStream.format("memory")
-        .queryName("guess3")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt3"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_until(
-        q, lambda: spark.sql("SELECT COUNT(*) FROM guess3").collect()[0][0],
-        expected=2, timeout=300,
-    )
-    got = sorted(
-        r.event_dt.strftime("%Y-%m-%d %H:%M:%S")
-        for r in spark.sql("SELECT * FROM guess3").collect()
-    )
-    assert got == ["2021-03-01 22:36:38", "2021-03-03 00:13:21"]
+    for i, day in enumerate(fraud_corpus.dates):
+        path = fraud_corpus.tx_path(day)
+        want = Counter(tuple(r) for r in guessing_events(_batch_tx(spark, path)).collect())
+        assert want, f"day {day}: no Q4 hit to compare"
+        landing = _land(tmp_path / f"landing_{i}", path)
+        name = f"guess_day_{i}"
+        q = _to_memory(guessing_amount_stream(stream_transactions(spark, landing)), name,
+                       tmp_path / f"ckpt_{i}")
+        _drain_until(q, lambda: spark.sql(f"SELECT COUNT(*) FROM {name}").collect()[0][0],
+                     expected=sum(want.values()))
+        got = Counter(tuple(r) for r in spark.sql(f"SELECT * FROM {name}").collect())
+        assert got == want, f"day {day}"
 
 
-@needs_refdata
-def test_stream_to_mart_identity(spark, tmp_path):
-    """Full streaming path: file stream → stateful matcher → foreachBatch
-    identity enrichment → partitioned mart. The day-1 golden event lands in
-    REP_FRAUD with the right passport (5771 567535)."""
-    from etl_process_for_detecting_fraudulent_transactions_spark.schemas import REP_FRAUD
-    from etl_process_for_detecting_fraudulent_transactions_spark.sources.seed_source import (
-        read_seed_dims,
-    )
-    from etl_process_for_detecting_fraudulent_transactions_spark.storage import ParquetStore
+def test_two_day_stream_continuous_state(spark, fraud_corpus, tmp_path):
+    """Both generated days in one stream, one file per micro-batch, plus a
+    chain planted across midnight in two files of its own: the stream emits
+    exactly batch ``guessing_events`` over all four files read as one frame,
+    including the planted hit that no single file holds. The matcher's state
+    spans micro-batches."""
+    from etl_process_for_detecting_fraudulent_transactions_spark.plans.rules import guessing_events
     from etl_process_for_detecting_fraudulent_transactions_spark.streaming.pipeline import (
         guessing_amount_stream,
-        stream_events_to_mart,
         stream_transactions,
     )
-    from tests.conftest import SEED_DUMP
 
-    landing = tmp_path / "landing_m"
-    landing.mkdir()
-    shutil.copy(
-        os.path.join(REFDATA, "transactions_01032021.txt"),
-        landing / "transactions_01032021.txt",
-    )
-    dims = read_seed_dims(spark, SEED_DUMP)
-    store = ParquetStore(spark, str(tmp_path / "mart_store"))
-    q = stream_events_to_mart(
-        guessing_amount_stream(stream_transactions(spark, str(landing))),
-        dims["cards"], dims["accounts"], dims["clients"],
-        store, str(tmp_path / "ckpt_m"),
-    )
-    _drain_until(
-        q, lambda: store.read("rep_fraud", REP_FRAUD).count(), expected=1, timeout=300
-    )
-    rows = store.read("rep_fraud", REP_FRAUD).collect()
-    assert len(rows) == 1
-    assert rows[0].passport == "5771 567535"
-    assert rows[0].event_type == "guessing_amount_fraud"
-    assert rows[0].fio is not None and rows[0].report_date is not None
+    day1, day2 = fraud_corpus.dates
+    card, term = "9999 0000 0000 0001", "P0000"
+    late = _write_tx(tmp_path / "late_rejects.txt", [
+        (str(9_000_001 + i), f"{day1} {t}", amt, card, op, "REJECT", term)
+        for i, (t, amt, op) in enumerate(
+            (("23:50:00", "5000,00", "PAYMENT"), ("23:55:00", "4000,00", "PAYMENT"),
+             ("23:59:00", "3000,00", "WITHDRAW")))
+    ])
+    early = _write_tx(tmp_path / "early_success.txt", [
+        ("9000004", f"{day2} 00:05:00", "2000,00", card, "PAYMENT", "SUCCESS", term)])
+    files = [fraud_corpus.tx_path(day1), late, early, fraud_corpus.tx_path(day2)]
 
+    want = Counter(tuple(r) for r in guessing_events(_batch_tx(spark, files)).collect())
+    crossing = [k for k in want if k[0] == card]
+    assert len(crossing) == 1 and f"{crossing[0][1]}" == f"{day2} 00:05:00"
+
+    q = _to_memory(guessing_amount_stream(stream_transactions(spark, _land(tmp_path / "landing", *files))),
+                   "guess_two_days", tmp_path / "ckpt")
+    _drain_until(q, lambda: spark.sql("SELECT COUNT(*) FROM guess_two_days").collect()[0][0],
+                 expected=sum(want.values()))
+    got = Counter(tuple(r) for r in spark.sql("SELECT * FROM guess_two_days").collect())
+    assert got == want
 
 
 def test_stream_to_mart_matches_batch_guessing(spark, fraud_corpus, tmp_path):
     """Per generated day, the streaming Q4 path (file stream → stateful
     matcher → ``stream_events_to_mart``) lands exactly the rows of batch
-    ``guessing_amount_fraud`` over the same file, as a multiset."""
-    from collections import Counter
-
-    from etl_process_for_detecting_fraudulent_transactions_spark.plans.ingest import typed_transactions
+    ``guessing_amount_fraud`` over the same file, as a multiset, each
+    stamped with its report time and holding the planted chain's SUCCESS."""
     from etl_process_for_detecting_fraudulent_transactions_spark.plans.rules import guessing_amount_fraud
     from etl_process_for_detecting_fraudulent_transactions_spark.schemas import REP_FRAUD
-    from etl_process_for_detecting_fraudulent_transactions_spark.sources.csv_source import (
-        read_transactions_csv,
-        split_corrupt,
-    )
     from etl_process_for_detecting_fraudulent_transactions_spark.sources.seed_source import (
         read_seed_dims,
     )
@@ -247,236 +247,148 @@ def test_stream_to_mart_matches_batch_guessing(spark, fraud_corpus, tmp_path):
     cards, accounts, clients = dims["cards"], dims["accounts"], dims["clients"]
     for i, day in enumerate(fraud_corpus.dates):
         tx_path = fraud_corpus.tx_path(day)
-        tx = typed_transactions(split_corrupt(read_transactions_csv(spark, tx_path))[0])
-        want = Counter(tuple(r) for r in guessing_amount_fraud(tx, cards, accounts, clients)
+        want = Counter(tuple(r) for r in guessing_amount_fraud(_batch_tx(spark, tx_path), cards, accounts, clients)
                        .select(cols).collect())
         assert sum(want.values()) > 0, f"day {day}: no Q4 hit to compare"
 
-        landing = tmp_path / f"landing_{i}"
-        landing.mkdir()
-        shutil.copy(tx_path, landing / os.path.basename(tx_path))
         store = ParquetStore(spark, str(tmp_path / f"mart_{i}"))
         q = stream_events_to_mart(
-            guessing_amount_stream(stream_transactions(spark, str(landing))),
+            guessing_amount_stream(stream_transactions(spark, _land(tmp_path / f"landing_{i}", tx_path))),
             cards, accounts, clients, store, str(tmp_path / f"ckpt_{i}"),
         )
         _drain_until(
             q, lambda: store.read("rep_fraud", REP_FRAUD).count(),
             expected=sum(want.values()), timeout=300,
         )
-        got = Counter(tuple(r) for r in store.read("rep_fraud", REP_FRAUD).select(cols).collect())
-        assert got == want, f"day {day}"
+        rows = store.read("rep_fraud", REP_FRAUD).collect()
+        assert Counter(tuple(r[c] for c in cols) for r in rows) == want, f"day {day}"
+        assert all(r.report_dt is not None and r.report_date is not None for r in rows)
+        planted = {at for _card, kind, at in fraud_corpus.planted[day] if kind == "guessing_amount_fraud"}
+        assert planted <= {r.event_dt for r in rows}
 
-@needs_refdata
-def test_city_fraud_stream_day1(spark, tmp_path):
-    """Streaming city rule on day-1 data: the golden card (passport
-    8115 161624) is flagged; its batch event_dt 02:54:34 appears among the
-    streamed boundary events (streaming emits each hop, batch reports the
-    max per card)."""
-    from etl_process_for_detecting_fraudulent_transactions_spark.schemas import TERMINALS_SNAPSHOT
-    from etl_process_for_detecting_fraudulent_transactions_spark.sources.xlsx_source import (
-        read_xlsx_df,
+
+def _city_model(rows):
+    """The intended Q3 per transaction: per card in time order, flag a
+    transaction whose city differs from the previous transaction's, both
+    non-NULL, at most 60 minutes later; one (card, time) per flag."""
+    seqs = {}
+    for card, ts, city in sorted(rows, key=lambda r: r[1]):
+        seqs.setdefault(card, []).append((ts, city))
+    return Counter(
+        (card, ts)
+        for card, seq in seqs.items()
+        for (pts, pcity), (ts, city) in zip(seq, seq[1:])
+        if pcity is not None and city is not None and pcity != city and ts - pts <= dt.timedelta(minutes=60)
     )
+
+
+def test_city_fraud_stream_matches_python_model(spark, fraud_corpus, tmp_path):
+    """The streaming city rule over both generated days in one stream emits
+    exactly the hops of a plain-Python model of the intended semantics
+    (every hop, not batch Q3's per-card maximum): the planted 30-minute hop
+    is flagged, the planted 74-minute one is not."""
+    from pyspark.sql import functions as F
+
+    from etl_process_for_detecting_fraudulent_transactions_spark.schemas import TERMINALS_SNAPSHOT
+    from etl_process_for_detecting_fraudulent_transactions_spark.sources.xlsx_source import read_xlsx_df
     from etl_process_for_detecting_fraudulent_transactions_spark.streaming.pipeline import (
         city_fraud_stream,
         stream_transactions,
     )
-    from pyspark.sql import functions as F
 
-    landing = tmp_path / "landing_c"
-    landing.mkdir()
-    shutil.copy(
-        os.path.join(REFDATA, "transactions_01032021.txt"),
-        landing / "transactions_01032021.txt",
-    )
+    corpus = perfbench_module("corpus")
+    last = fraud_corpus.dates[-1]
+    city = {t[0]: t[2] for t in fraud_corpus.snapshots[last]}
+    files = [fraud_corpus.tx_path(day) for day in fraud_corpus.dates]
+    rows = []
+    for path in files:
+        with open(path, encoding="utf-8") as f:
+            next(f)
+            for line in f:
+                _id, ts, _amt, card, _op, _res, term = line.rstrip("\n").split(";")
+                rows.append((card, dt.datetime.strptime(ts, "%Y-%m-%d %H:%M:%S"), city.get(term)))
+    want = _city_model(rows)
+    planted = {(c, at) for day in fraud_corpus.dates for c, kind, at in fraud_corpus.planted[day]
+               if kind == "city_fraud"}
+    assert want and 0 < len(planted & set(want)) < len(planted)
+
     term = read_xlsx_df(
-        spark, os.path.join(REFDATA, "terminals_01032021.xlsx"), TERMINALS_SNAPSHOT
+        spark, os.path.join(fraud_corpus.data_dir, f"terminals_{corpus.ddmmyyyy(last)}.xlsx"),
+        TERMINALS_SNAPSHOT,
     )
-    tx = stream_transactions(spark, str(landing)).join(
-        F.broadcast(
-            term.select(F.col("terminal_id").alias("terminal"), "terminal_city")
-        ),
+    tx = stream_transactions(spark, _land(tmp_path / "landing", *files)).join(
+        F.broadcast(term.select(F.col("terminal_id").alias("terminal"), "terminal_city")),
         "terminal",
         "left",
     )
-    q = (
-        city_fraud_stream(tx)
-        .writeStream.format("memory")
-        .queryName("city_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_c"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_until(
-        q, lambda: spark.sql("SELECT COUNT(*) FROM city_stream").collect()[0][0],
-        timeout=300,  # row count not known a priori: stable-poll
-    )
-    rows = spark.sql("SELECT * FROM city_stream").collect()
-    assert rows, "no city events streamed"
-    stamps = {r.event_dt.strftime("%Y-%m-%d %H:%M:%S") for r in rows}
-    assert "2021-03-01 02:54:34" in stamps
+    q = _to_memory(city_fraud_stream(tx), "city_stream", tmp_path / "ckpt")
+    _drain_until(q, lambda: spark.sql("SELECT COUNT(*) FROM city_stream").collect()[0][0],
+                 expected=sum(want.values()))
+    got = spark.sql("SELECT * FROM city_stream").collect()
+    assert {r.event_type for r in got} == {"city_fraud"}
+    assert Counter((r.card_num, r.event_dt) for r in got) == want
 
 
-@needs_refdata
-def test_passport_fraud_stream_day2(spark, tmp_path):
-    """Streaming Q1 on day-2 data reproduces the 480 golden rows (all for
-    blacklisted client passport 3032 452883) via stream-static broadcast
-    joins — the batch rule function applied to a streaming frame."""
-    import datetime as dt
-
+def test_stateless_rules_on_a_stream_match_batch(spark, fraud_corpus, tmp_path):
+    """Batch Q1 and Q2 (``rules.passport_fraud``, ``rules.account_fraud``)
+    applied to the streaming frame of generated day 2 emit exactly the
+    batch rules over the same file: both are stream-static broadcast joins
+    and a generator, so they run on a stream unchanged."""
     from etl_process_for_detecting_fraudulent_transactions_spark.plans.ingest import typed_blacklist
+    from etl_process_for_detecting_fraudulent_transactions_spark.plans.rules import (
+        account_fraud,
+        passport_fraud,
+    )
     from etl_process_for_detecting_fraudulent_transactions_spark.schemas import BLACKLIST_RAW
-    from etl_process_for_detecting_fraudulent_transactions_spark.sources.seed_source import (
-        read_seed_dims,
-    )
-    from etl_process_for_detecting_fraudulent_transactions_spark.sources.xlsx_source import (
-        read_xlsx_df,
-    )
+    from etl_process_for_detecting_fraudulent_transactions_spark.sources.seed_source import read_seed_dims
+    from etl_process_for_detecting_fraudulent_transactions_spark.sources.xlsx_source import read_xlsx_df
     from etl_process_for_detecting_fraudulent_transactions_spark.streaming.pipeline import (
-        passport_fraud_stream,
         stream_transactions,
     )
-    from tests.conftest import SEED_DUMP
 
-    landing = tmp_path / "landing_p"
-    landing.mkdir()
-    shutil.copy(
-        os.path.join(REFDATA, "transactions_02032021.txt"),
-        landing / "transactions_02032021.txt",
-    )
-    dims = read_seed_dims(spark, SEED_DUMP)
-    bl = typed_blacklist(
-        read_xlsx_df(
-            spark, os.path.join(REFDATA, "passport_blacklist_02032021.xlsx"), BLACKLIST_RAW
-        )
-    )
-    out = passport_fraud_stream(
-        stream_transactions(spark, str(landing)),
-        dims["cards"], dims["accounts"], dims["clients"], bl,
-        run_date=dt.date(2021, 3, 2),
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("passport_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_p"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    corpus = perfbench_module("corpus")
+    day = fraud_corpus.dates[1]
+    path = fraud_corpus.tx_path(day)
+    dims = read_seed_dims(spark, fraud_corpus.seed_path)
+    cards, accounts, clients = dims["cards"], dims["accounts"], dims["clients"]
+    bl = typed_blacklist(read_xlsx_df(
+        spark, os.path.join(fraud_corpus.data_dir, f"passport_blacklist_{corpus.ddmmyyyy(day)}.xlsx"),
+        BLACKLIST_RAW,
+    ))
+
+    def q1_q2(tx):
+        return passport_fraud(tx, cards, accounts, clients, bl, day).unionByName(
+            account_fraud(tx, cards, accounts, clients, day))
+
+    want = Counter(tuple(r) for r in q1_q2(_batch_tx(spark, path)).collect())
+    assert {k[-1] for k in want} == {"passport_fraud", "account_fraud"}
+    q = _to_memory(q1_q2(stream_transactions(spark, _land(tmp_path / "landing", path))),
+                   "stateless_rules", tmp_path / "ckpt")
     q.awaitTermination(300)
-    rows = spark.sql("SELECT * FROM passport_stream").collect()
-    assert len(rows) == 480
-    assert {r.passport for r in rows} == {"3032 452883"}
-    assert {r.event_type for r in rows} == {"passport_fraud"}
+    got = Counter(tuple(r) for r in spark.sql("SELECT * FROM stateless_rules").collect())
+    assert got == want
 
 
-def _protobuf_ok() -> bool:
-    # transformWithStateInPandas's Python runner requires google.protobuf,
-    # which this container lacks; the operator is gated the same way.
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-# PERMANENT environment limitation, not a silent skip (VERDICT r3 #7): this
-# container cannot install packages and `import google.protobuf.descriptor`
-# raises ModuleNotFoundError ("No module named 'google'") — the
-# transformWithStateInPandas Python runner hard-requires protobuf for its
-# state-server messages, with no pure-Python fallback to vendor. The xfail
-# RUNS the test: the operator's own fail-fast ImportError (pipeline.py,
-# guessing_amount_stream_tws) is the recorded failure, and if protobuf ever
-# appears the test executes for real (strict=False lets it pass then).
-@needs_refdata
-@pytest.mark.xfail(
-    not _protobuf_ok(),
-    reason=(
-        "ModuleNotFoundError: No module named 'google' — "
-        "transformWithStateInPandas requires google.protobuf; the "
-        "applyInPandasWithState equivalent (guessing_amount_stream) is "
-        "golden-tested instead"
-    ),
-    raises=ImportError,
-    run=True,
-    strict=False,
-)
-def test_guessing_amount_tws_day1(spark, tmp_path):
-    """The transformWithStateInPandas Q4 variant reproduces the day-1 golden
-    event (same match_step core as the applyInPandasWithState version)."""
-    from etl_process_for_detecting_fraudulent_transactions_spark.streaming.pipeline import (
-        guessing_amount_stream_tws,
-        stream_transactions,
-    )
-
-    landing = tmp_path / "landing_t"
-    landing.mkdir()
-    shutil.copy(
-        os.path.join(REFDATA, "transactions_01032021.txt"),
-        landing / "transactions_01032021.txt",
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            guessing_amount_stream_tws(stream_transactions(spark, str(landing)))
-            .writeStream.format("memory")
-            .queryName("guess_tws")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt_t"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    rows = spark.sql("SELECT * FROM guess_tws").collect()
-    assert len(rows) == 1
-    assert rows[0].card_num is not None
-    assert rows[0].event_dt.strftime("%Y-%m-%d %H:%M:%S") == "2021-03-01 22:36:38"
-
-
-@needs_refdata
-def test_card_sessions_stream_matches_batch(spark, tmp_path):
+def test_card_sessions_stream_matches_batch(spark, fraud_corpus, tmp_path):
     """Session windows (gap-merge) computed by the STREAMING path (state
     store, watermark-closed sessions) equal the BATCH path (same function on
     a static frame) for every session the watermark closed — one operator,
     two execution modes."""
     from pyspark.sql import functions as F
 
-    from etl_process_for_detecting_fraudulent_transactions_spark.plans.ingest import (
-        typed_transactions,
-    )
-    from etl_process_for_detecting_fraudulent_transactions_spark.sources.csv_source import (
-        read_transactions_csv,
-    )
     from etl_process_for_detecting_fraudulent_transactions_spark.streaming.pipeline import (
         card_sessions,
         stream_transactions,
     )
 
-    src = os.path.join(REFDATA, "transactions_01032021.txt")
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    shutil.copy(src, landing / "transactions_01032021.txt")
-
-    q = (
-        card_sessions(stream_transactions(spark, str(landing)))
-        .writeStream.format("memory")
-        .queryName("card_sessions")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sessions"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    src = fraud_corpus.tx_path(fraud_corpus.dates[0])
+    q = _to_memory(card_sessions(stream_transactions(spark, _land(tmp_path / "landing", src))),
+                   "card_sessions", tmp_path / "ckpt_sessions")
     q.awaitTermination(120)
     streamed = {tuple(r) for r in spark.sql("SELECT * FROM card_sessions").collect()}
     assert streamed, "no sessions closed by the watermark"
 
-    batch_tx = typed_transactions(read_transactions_csv(spark, src))
+    batch_tx = _batch_tx(spark, src)
     batch_all = {tuple(r) for r in card_sessions(batch_tx).collect()}
 
     # (1) soundness: every emitted session is EXACTLY a batch session (same
@@ -488,8 +400,6 @@ def test_card_sessions_stream_matches_batch(spark, tmp_path):
     # (end <= wm - gap) must have been emitted. Sessions in the last
     # (wm - gap, wm] strip may or may not flush depending on micro-batch
     # timing, so the exact boundary is not asserted.
-    import datetime as dt
-
     max_ts = batch_tx.agg(F.max("trans_date")).collect()[0][0]
     safe_cutoff = max_ts - dt.timedelta(hours=2) - dt.timedelta(minutes=30)
     safe = {t for t in batch_all if t[2] <= safe_cutoff}
@@ -497,115 +407,46 @@ def test_card_sessions_stream_matches_batch(spark, tmp_path):
     assert len(safe) > 1000  # the property is non-vacuous at this data size
 
 
-@needs_refdata
-def test_stream_stream_join_matches_batch(spark, tmp_path):
+def test_stream_stream_join_matches_batch(spark, fraud_corpus, tmp_path):
     """The stream-stream (REJECT, SUCCESS within 20 min) self join emits
     EXACTLY the batch join of the same frames — inner joins emit on match,
     so unlike the session test no watermark strip is excluded."""
-    from etl_process_for_detecting_fraudulent_transactions_spark.plans.ingest import (
-        typed_transactions,
-    )
-    from etl_process_for_detecting_fraudulent_transactions_spark.sources.csv_source import (
-        read_transactions_csv,
-    )
     from etl_process_for_detecting_fraudulent_transactions_spark.streaming.pipeline import (
         reject_then_success_join,
         stream_transactions,
     )
 
-    src = os.path.join(REFDATA, "transactions_01032021.txt")
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    shutil.copy(src, landing / "transactions_01032021.txt")
-
-    q = (
-        reject_then_success_join(stream_transactions(spark, str(landing)))
-        .writeStream.format("memory")
-        .queryName("rs_pairs")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_rs"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    src = fraud_corpus.tx_path(fraud_corpus.dates[0])
+    q = _to_memory(reject_then_success_join(stream_transactions(spark, _land(tmp_path / "landing", src))),
+                   "rs_pairs", tmp_path / "ckpt_rs")
     q.awaitTermination(120)
-    streamed = sorted(tuple(r) for r in spark.sql("SELECT * FROM rs_pairs").collect())
+    streamed = Counter(tuple(r) for r in spark.sql("SELECT * FROM rs_pairs").collect())
 
-    batch = reject_then_success_join(
-        typed_transactions(read_transactions_csv(spark, src))
-    )
-    expected = sorted(tuple(r) for r in batch.collect())
-    assert len(expected) > 50  # non-vacuous at day-1 size
+    expected = Counter(tuple(r) for r in reject_then_success_join(_batch_tx(spark, src)).collect())
+    assert sum(expected.values()) > 50  # non-vacuous at one generated day
     assert streamed == expected
 
 
-@needs_refdata
-def test_dedup_stream_drops_redelivered_file(spark, tmp_path):
+def test_dedup_stream_drops_redelivered_file(spark, fraud_corpus, tmp_path):
     """The same daily file delivered TWICE (at-least-once upstream): the
     streaming dedup emits each trans_id exactly once — output matches the
     batch distinct of a single copy."""
-    from etl_process_for_detecting_fraudulent_transactions_spark.plans.ingest import (
-        typed_transactions,
-    )
-    from etl_process_for_detecting_fraudulent_transactions_spark.sources.csv_source import (
-        read_transactions_csv,
-    )
     from etl_process_for_detecting_fraudulent_transactions_spark.streaming.pipeline import (
         dedup_stream,
         stream_transactions,
     )
 
-    src = os.path.join(REFDATA, "transactions_01032021.txt")
-    landing = tmp_path / "landing_dd"
-    landing.mkdir()
-    shutil.copy(src, landing / "transactions_a.txt")
-    shutil.copy(src, landing / "transactions_b.txt")
+    src = fraud_corpus.tx_path(fraud_corpus.dates[0])
+    landing = _land(tmp_path / "landing_dd", src)
+    shutil.copyfile(src, os.path.join(landing, "transactions_again.txt"))
 
-    q = (
-        dedup_stream(stream_transactions(spark, str(landing)))
-        .writeStream.format("memory")
-        .queryName("dedup_tx")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_dd"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = _to_memory(dedup_stream(stream_transactions(spark, landing)), "dedup_tx", tmp_path / "ckpt_dd")
     q.awaitTermination(120)
-    streamed_ids = [
-        r.trans_id for r in spark.sql("SELECT trans_id FROM dedup_tx").collect()
-    ]
+    streamed_ids = [r.trans_id for r in spark.sql("SELECT trans_id FROM dedup_tx").collect()]
     assert len(streamed_ids) == len(set(streamed_ids)), "stream emitted duplicates"
 
-    batch_ids = {
-        r.trans_id
-        for r in typed_transactions(read_transactions_csv(spark, src))
-        .select("trans_id")
-        .collect()
-    }
+    batch_ids = {r.trans_id for r in _batch_tx(spark, src).select("trans_id").collect()}
     assert set(streamed_ids) == batch_ids
-
-
-def _await_sink_stable(
-    spark, q, count_sql: str, stable_polls: int = 5, timeout: float = 180.0
-):
-    """Wait until the memory sink's row count is non-zero and unchanged for
-    ``stable_polls`` consecutive 1-second polls, then stop the query.
-
-    Needed because a stateful stream with ProcessingTimeTimeout never
-    self-terminates under trigger(availableNow): once the files drain it
-    loops empty micro-batches ('No new data but cleaning up state') waiting
-    for state timeouts, so awaitTermination(N) always burns the full N."""
-    import time as _t
-
-    t0, last, stable = _t.time(), -1, 0
-    while _t.time() - t0 < timeout:
-        n = spark.sql(count_sql).collect()[0][0]
-        stable = stable + 1 if (n == last and n > 0) else 0
-        last = n
-        if stable >= stable_polls:
-            break
-        _t.sleep(1)
-    q.stop()
-    q.awaitTermination(60)
 
 
 def test_funnel_stream_matches_batch(spark, tmp_path):
@@ -641,10 +482,7 @@ def test_funnel_stream_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    # ProcessingTimeTimeout keeps availableNow alive with empty
-    # "cleaning up state" batches long after the data is drained —
-    # poll the sink for stability instead of waiting for termination
-    _await_sink_stable(spark, q, "SELECT COUNT(*) AS n FROM funnel_stream_out")
+    _drain_until(q, lambda: spark.sql("SELECT COUNT(*) FROM funnel_stream_out").collect()[0][0])
     got = {
         r.user_id: r.stage
         for r in spark.sql(
@@ -706,7 +544,7 @@ def test_funnel_stream_out_of_order_divergence(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    _await_sink_stable(spark, q, "SELECT COUNT(*) AS n FROM funnel_ooo")
+    _drain_until(q, lambda: spark.sql("SELECT COUNT(*) FROM funnel_ooo").collect()[0][0])
     rows = spark.sql(
         "SELECT stage, t_view_us, t_click_us, t_purchase_us "
         "FROM funnel_ooo ORDER BY stage"
@@ -754,7 +592,7 @@ def test_ewma_stream_matches_python_replay(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    _await_sink_stable(spark, q, "SELECT COUNT(*) AS n FROM ewma_stream_out")
+    _drain_until(q, lambda: spark.sql("SELECT COUNT(*) FROM ewma_stream_out").collect()[0][0])
     got = {
         (r.event_type, r.event_id): (r.x_milli, r.s_prev_milli)
         for r in spark.sql("SELECT * FROM ewma_stream_out").collect()
