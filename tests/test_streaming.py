@@ -214,8 +214,7 @@ def test_two_day_stream_continuous_state(spark, fraud_corpus, tmp_path):
     files = [fraud_corpus.tx_path(day1), late, early, fraud_corpus.tx_path(day2)]
 
     want = Counter(tuple(r) for r in guessing_events(_batch_tx(spark, files)).collect())
-    crossing = [k for k in want if k[0] == card]
-    assert len(crossing) == 1 and f"{crossing[0][1]}" == f"{day2} 00:05:00"
+    assert [k[1] for k in want if k[0] == card] == [dt.datetime.combine(day2, dt.time(0, 5))]
 
     q = _to_memory(guessing_amount_stream(stream_transactions(spark, _land(tmp_path / "landing", *files))),
                    "guess_two_days", tmp_path / "ckpt")
